@@ -4142,7 +4142,8 @@ def q_snapshot_pushdown_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed clustered on o_orderkey, queried as ``SELECT ... WHERE
     o_orderkey >= 1000 AND o_orderkey <= 5000`` through the statement
     executor — its pruned attach (`sql_exec._pruned_attach`) turns the
-    conjuncts into a `read_snapshot_pruned` view, so only the manifest
+    typed range filter Catalyst's optimized plan puts over the table's
+    scan into a `read_snapshot_pruned` view, so only the manifest
     files whose recorded [min, max] intersect the range are opened,
     and the predicate is re-applied on top (pruning never changes the
     answer).  HISTORY: round 8 implemented this via the Spark 4.1

@@ -795,12 +795,11 @@ def q_sql_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``o_orderkey`` with BLOOM filters on the hash-scattered
     ``o_custkey`` is queried with plain SQL text — the statement
     executor's STATEMENT-LEVEL pruned attach (`sql_exec.
-    _pruned_attach`) parses each statement's WHERE conjuncts (per
-    table since round 11's inner-join support) and
-    re-registers the view as `read_snapshot_pruned` over exactly those
-    predicates, so the range lookup opens ~1 of 8 files by recorded
-    min/max stats and the point lookup skips by the per-file blooms
-    stats cannot help with.  This layer replaced the DataSource
+    _pruned_attach`) reads the typed filters Catalyst's optimized plan
+    puts directly over each table's scans and re-registers the view as
+    `read_snapshot_pruned` over the claims they imply, so the range
+    lookup opens ~1 of 8 files by recorded min/max stats and the point
+    lookup skips by the per-file blooms stats cannot help with.  This layer replaced the DataSource
     pushFilters routing, WITHDRAWN after measurement: Spark 4.1 keeps
     one Python-DataSource read plan per relation (last scan wins), so
     per-scan file pruning silently loses rows on any relation reuse —
@@ -994,7 +993,8 @@ def q_sql_ddl_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SNAP_SQL_CACHE[key] = cdir
     ds = _dsum_spark("price")
     # one statement per lookup so the executor's statement-level
-    # pruned attach fires for each (a UNION keeps the plain attach)
+    # pruned attach fires for each (a UNION of the two would prune by
+    # the OR of its scans' filters — a range envelope, not two windows)
     rng = execute_sql(
         spark,
         f"SELECT 'range' AS dim, COUNT(*) AS n, {ds} AS total "
@@ -1031,11 +1031,12 @@ def q_sql_timestamp_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     11): an events table is declared and loaded entirely in SQL —
     ``CLUSTERED BY (ts) STATS BY (ts, event_id)`` — and queried with a
     timestamp-literal window and an ``event_id IN (...)`` list.  The
-    statement executor's pruned attach parses the string literals to
-    TYPED datetime bounds (gated on the column dtype — the round-11
-    fix for ' '-separated literals lexically sorting below their own
-    instant's ISO-'T' manifest stat) and the IN list to per-value
-    stats probes, so the window opens ~1 of 8 ts-clustered files and
+    statement executor's pruned attach takes the window as the TYPED
+    timestamp literals Catalyst's optimized plan carries (compared to
+    the ISO manifest stats through `read_snapshot_pruned`'s widening —
+    the round-11 fix for ' '-separated literals sorting below their own
+    instant's 'T' stat) and the IN list as per-value stats probes, so
+    the window opens ~1 of 8 ts-clustered files and
     the id list only the files whose [min, max] can hold a listed id
     (event_id rides the same clustering — it correlates with ts).
     Timestamps are written as annotated INT64 micros
@@ -1091,12 +1092,11 @@ def q_sql_timestamp_pruned_ansi(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed-literal spelling — what every BI tool and most humans emit —
     previously disabled statement pruning WHOLESALE, because the
     executor bailed on any statement containing a TIMESTAMP token (a
-    guard aimed at ``TIMESTAMP AS OF`` time travel).  The bail is now
-    the exact three-token sequence, and the typed literals themselves
-    are claim OPERANDS: ``TIMESTAMP 'x'`` claims a typed instant bound
-    under the same faithful-parse + UTC gates as the string spelling,
-    and ``DATE 'x'`` on a timestamp column widens to the UTC-midnight
-    instant (Spark's own cast under the gated session).  Same table,
+    guard aimed at ``TIMESTAMP AS OF`` time travel).  The pruned
+    attach now reads the optimized plan, where both spellings are the
+    same typed literal: ``TIMESTAMP 'x'`` a typed instant bound, and
+    ``DATE 'x'`` on a timestamp column the instant Spark's own cast
+    gives it.  Same table,
     same file skips as `sql_timestamp_pruned_scan` — pinned in
     tests/test_sql_exec.py.  The reference has no typed literals to
     prune with (SQLite, no file layout); at 100 TB the ANSI spelling
@@ -1137,19 +1137,17 @@ FROM j GROUP BY etype
 """,
 )
 def q_sql_cte_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CTE-body statement pruning (round 13 — VERDICT r12 'Next round
-    #2', the single most common way BI users spell the prunable
-    shapes): ``WITH j AS (SELECT … FROM fact WHERE ts BETWEEN …)
-    SELECT … FROM j GROUP BY …`` previously FULL-SCANNED the fact
-    table, because `_pruned_attach` required exactly one SELECT/FROM.
-    The executor now splits the statement into per-SELECT units and
-    claims each CTE body's own WHERE conjuncts for that body's table
-    with the identical single-SELECT soundness argument — a table
-    referenced outside its claiming unit, RECURSIVE/nested/shadowing
-    shapes, all keep the plain attach (tests/test_sql_exec.py pins the
-    file counts and the bails).  The reference has no statement layer
-    at all; at 100 TB the difference is a day's files vs the table for
-    the exact query a dashboard emits."""
+    """CTE-body statement pruning (round 13 — the single most common
+    way BI users spell the prunable shapes): ``WITH j AS (SELECT …
+    FROM fact WHERE ts BETWEEN …) SELECT … FROM j GROUP BY …``.  The
+    executor's pruned attach reads Catalyst's optimized plan, where the
+    CTE is inlined and its typed range filter sits directly over the
+    fact table's scan, so only the window's files open — and a table
+    scanned more than once prunes by the OR of its scans' filters
+    (tests/test_sql_exec.py and tests/test_sql_prune_differential.py
+    pin the file counts and the row parity).  The reference has no
+    statement layer at all; at 100 TB the difference is a day's files
+    vs the table for the exact query a dashboard emits."""
     from .sql_exec import execute_sql
 
     cdir = _tsp_catalog(spark, sf_dir)
@@ -2053,14 +2051,13 @@ GROUP BY c_mktsegment ORDER BY segment
 def q_sql_star_join_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTI-TABLE statement pruning (round 11 — the star-join
     pattern): a fact table clustered on its date and a dim clustered
-    on its key are joined with plain SQL; the statement executor
-    attributes each WHERE conjunct to its table (by qualifier, or
-    through the one schema carrying the column) and re-registers BOTH
-    views through `read_snapshot_pruned` — the fact side opens only
+    on its key are joined with plain SQL; Catalyst's optimized plan
+    pushes each WHERE conjunct onto its own table's scan, and the
+    statement executor re-registers BOTH views through
+    `read_snapshot_pruned` over those filters — the fact side opens only
     the date window's files (a half-open ``>= .. <`` range, the
     canonical incremental scan), the dim side only the key range's.
-    Sound for inner joins because the WHERE is conjunctive over the
-    join result.  At 100 TB this is the dominant query shape: the
+    At 100 TB this is the dominant query shape: the
     reference joins its whole sessions table for any window
     (pipeline/queries.py); here the window IS the scan.  Build cached
     per (query, sf_dir); per-table file counts pinned in

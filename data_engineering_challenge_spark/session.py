@@ -11,7 +11,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` when set, else the cores this process may
+    run on — so ``local[k]`` never oversubscribes a small machine."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+DEFAULT_CPUS = _default_cpus()
 
 
 def get_spark(

@@ -23,6 +23,8 @@ that, write once with this source and read parquet thereafter.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -101,25 +103,23 @@ class SyntheticEventsReader(DataSourceReader):
             yield _row(i)
 
 
-#: sessions that already registered each source CLASS (r15): a
-#: registration is a ~0.5 s py4j round trip and re-registering the same
-#: class is pure overhead — weak so restarted sessions re-register.
-#: Keyed by the class OBJECT, not its name: registering a DIFFERENT
-#: class under an already-seen name (tests swapping implementations)
-#: must still reach Spark and replace the old one (review, r15).
-_REGISTERED: dict = {}
+#: per session, the class last registered under each source NAME (r15):
+#: a registration is a ~0.5 s py4j round trip and re-registering the
+#: same class is pure overhead — weak so restarted sessions re-register.
+#: Spark keeps whichever class registered LAST under a name, so
+#: registering A, then B, then A again under one name must reach Spark
+#: all three times.
+_REGISTERED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _register_once(spark, cls) -> None:
     """Shared per-session registration memo for every Python data source
     in the engine (pyds + snapshot_source)."""
-    import weakref
-
-    seen = _REGISTERED.setdefault(cls, weakref.WeakSet())
-    if spark in seen:
+    names = _REGISTERED.setdefault(spark, {})
+    if names.get(cls.name()) is cls:
         return
     spark.dataSource.register(cls)
-    seen.add(spark)
+    names[cls.name()] = cls
 
 
 def register_synthetic_source(spark) -> None:

@@ -2769,6 +2769,7 @@ def read_snapshot_pruned(
     point_eq: dict | None = None,
     point_in: dict | None = None,
     prefixes: dict | None = None,
+    _keep: list | None = None,
 ) -> DataFrame:
     """Stats-pruned snapshot scan: only manifest files whose recorded
     [min, max] for ``col`` intersects [lo, hi] are opened — file
@@ -2816,7 +2817,11 @@ def read_snapshot_pruned(
     bare isoformat, hi side + '~') that is skip-safe across every
     representation of the same instant ('T'-seconds, '.ffffff'
     micros, '+00:00' offset) — the round-11 fix for string timestamp
-    literals lexically sorting below their own instant's stat."""
+    literals lexically sorting below their own instant's stat.
+
+    ``_keep`` (internal) is the file list `_prune_keep` already chose
+    for these claims — the SQL executor decides from it whether the
+    pruned view is worth building."""
     from pyspark.sql import functions as F
 
     if ranges is None:
@@ -2911,6 +2916,74 @@ def read_snapshot_pruned(
                 f"for {missing} — the table's layout declares "
                 f"{sorted(transforms)}"
             )
+    fields = m.get("fields")
+    keep = _prune_keep(
+        m, ranges, partition_eq, point_eq, point_in, prefixes
+    ) if _keep is None else _keep
+    pred = None
+    for c, rng in ranges.items():
+        term = _range_term(c, rng)
+        pred = term if pred is None else pred & term
+    for c, val in (point_eq or {}).items():
+        term = F.col(c) == F.lit(val)
+        pred = term if pred is None else pred & term
+    for c, vals in (point_in or {}).items():
+        term = F.col(c).isin(list(vals))
+        pred = term if pred is None else pred & term
+    for c, pre in (prefixes or {}).items():
+        term = F.col(c).startswith(pre)
+        pred = term if pred is None else pred & term
+    for name, val in (partition_eq or {}).items():
+        if isinstance(val, (list, tuple, set)):
+            term = F.expr(transforms[name]).cast("string").isin(
+                [str(v) for v in val]
+            )
+        else:
+            term = F.expr(transforms[name]).cast("string") == str(val)
+        pred = term if pred is None else pred & term
+    if not keep:
+        return (
+            read_snapshot(spark, root, v, _allow_mor_raw=True)
+            .filter(pred)
+            .limit(0)  # schema-only: no rows surface
+        )
+    if m.get("delete_files"):
+        # MoR tables PRUNE AND MERGE: the stats/partition skip bounds
+        # the DATA scan while every delete anti-join still applies (a
+        # delete kills by key/position regardless of which data files
+        # we read) — the point-lookup-on-a-CDC-table path that needs no
+        # compaction first.  Skipping is still sound: a skipped file's
+        # rows are provably outside the predicate, deleted or not.
+        all_ranges = dict(ranges)
+        all_ranges.update({c: (val, val) for c, val in (point_eq or {}).items()})
+        return read_snapshot_mor(
+            spark, root, v, _files=keep, _eq_delete_ranges=all_ranges or None
+        ).filter(pred)
+    out = _read_files_logical(spark, root, m, keep)
+    if fields:
+        # schema stability: a logical field carried only by pruned-away
+        # files must still appear (as NULL), so the pruned read's schema
+        # never depends on which files survived — union with a LIMIT 0
+        # shell of the full file set (schema-only, no data read)
+        shell = _read_files_logical(spark, root, m, m["files"]).limit(0)
+        out = out.unionByName(shell, allowMissingColumns=True)
+        order = [x["name"] for x in fields if x["name"] in set(out.columns)]
+        out = out.select(*order)
+    return out.filter(pred)
+
+
+def _prune_keep(
+    m: dict,
+    ranges: dict | None = None,
+    partition_eq: dict | None = None,
+    point_eq: dict | None = None,
+    point_in: dict | None = None,
+    prefixes: dict | None = None,
+) -> list[str]:
+    """The files of manifest ``m`` a `read_snapshot_pruned` scan with
+    these claims must open — every file not provably disjoint from
+    them (the skip rules are documented there)."""
+    ranges = ranges or {}
     stats = m.get("stats") or {}
     blooms = m.get("blooms") or {}
     pvals = m.get("partition_values") or {}
@@ -3089,57 +3162,7 @@ def read_snapshot_pruned(
                 ok = False  # recorded value differs (incl. null marker)
         if ok:
             keep.append(f)
-    pred = None
-    for c, rng in ranges.items():
-        term = _range_term(c, rng)
-        pred = term if pred is None else pred & term
-    for c, val in (point_eq or {}).items():
-        term = F.col(c) == F.lit(val)
-        pred = term if pred is None else pred & term
-    for c, vals in (point_in or {}).items():
-        term = F.col(c).isin(list(vals))
-        pred = term if pred is None else pred & term
-    for c, pre in (prefixes or {}).items():
-        term = F.col(c).startswith(pre)
-        pred = term if pred is None else pred & term
-    for name, val in (partition_eq or {}).items():
-        if isinstance(val, (list, tuple, set)):
-            term = F.expr(transforms[name]).cast("string").isin(
-                [str(v) for v in val]
-            )
-        else:
-            term = F.expr(transforms[name]).cast("string") == str(val)
-        pred = term if pred is None else pred & term
-    if not keep:
-        return (
-            read_snapshot(spark, root, v, _allow_mor_raw=True)
-            .filter(pred)
-            .limit(0)  # schema-only: no rows surface
-        )
-    if m.get("delete_files"):
-        # MoR tables PRUNE AND MERGE: the stats/partition skip bounds
-        # the DATA scan while every delete anti-join still applies (a
-        # delete kills by key/position regardless of which data files
-        # we read) — the point-lookup-on-a-CDC-table path that needs no
-        # compaction first.  Skipping is still sound: a skipped file's
-        # rows are provably outside the predicate, deleted or not.
-        all_ranges = dict(ranges)
-        all_ranges.update({c: (val, val) for c, val in (point_eq or {}).items()})
-        return read_snapshot_mor(
-            spark, root, v, _files=keep, _eq_delete_ranges=all_ranges or None
-        ).filter(pred)
-    out = _read_files_logical(spark, root, m, keep)
-    if fields:
-        # schema stability: a logical field carried only by pruned-away
-        # files must still appear (as NULL), so the pruned read's schema
-        # never depends on which files survived — union with a LIMIT 0
-        # shell of the full file set (schema-only, no data read)
-        shell = _read_files_logical(spark, root, m, m["files"]).limit(0)
-        out = out.unionByName(shell, allowMissingColumns=True)
-        order = [x["name"] for x in fields if x["name"] in set(out.columns)]
-        out = out.select(*order)
-    return out.filter(pred)
-
+    return keep
 
 def snapshot_compact(
     spark: SparkSession,
@@ -5309,10 +5332,10 @@ def _read_delete_lists(spark, root: str, dels: list, key_tuple, seq_out: str):
     `compact_delete_files` (r15; extracted after review so the two paths
     cannot drift on which rows a delete kills).
 
-    Files are batched per (kind, physical-schema) subgroup into a single
-    ``spark.read.parquet`` call (each call is a schema-inference driver
-    job, so a table with N merge commits used to pay N reads per
-    composition); per-file sequences re-attach from a literal suffix→seq
+    Files are batched per (kind, physical-schema, field-id binding)
+    subgroup into a single ``spark.read.parquet`` call (each call is a
+    schema-inference driver job, so a table with N merge commits used to
+    pay N reads per composition); per-file sequences re-attach from a literal suffix→seq
     map over ``_metadata.file_path`` — bounded by the delete-file count
     (commits since compaction), never table size.  ``equality-multi``
     lists (minor-compacted) carry their sequences PER ROW and only need
@@ -5325,10 +5348,18 @@ def _read_delete_lists(spark, root: str, dels: list, key_tuple, seq_out: str):
     side = None
     subgroups: dict[tuple, list[dict]] = {}
     for d in dels:
+        # the field ids ride in the key: a batch projects every list
+        # with ITS FIRST list's binding, so lists sharing physical key
+        # names but bound to different fields must never share one
         subgroups.setdefault(
-            (d.get("kind") == "equality-multi", tuple(d["keys"])), []
+            (
+                d.get("kind") == "equality-multi",
+                tuple(d["keys"]),
+                tuple(d.get("key_ids") or ()),
+            ),
+            [],
         ).append(d)
-    for (is_multi, _phys), sub in subgroups.items():
+    for (is_multi, _phys, _ids), sub in subgroups.items():
         sufs = ["/".join(d["file"].split(os.sep)[-2:]) for d in sub]
         if len(set(sufs)) != len(sufs):  # pragma: no cover - uuid dirs
             for d in sub:

@@ -35,6 +35,9 @@ statement is O(tables) pure metadata.
 
 from __future__ import annotations
 
+import datetime
+import json
+import logging
 import os
 import re
 
@@ -920,48 +923,489 @@ def _rewrite_time_travel(
 
 def _run_query(spark: SparkSession, catalog_dir: str, sql: str) -> DataFrame:
     entries = _attach(spark, catalog_dir, sql)
-    meta = _metadata_count(spark, catalog_dir, sql, entries)
-    if meta is None:
-        meta = _metadata_range_count(spark, catalog_dir, sql, entries)
-    if meta is None:
-        meta = _metadata_agg(spark, catalog_dir, sql, entries)
-    if meta is None:
-        meta = _metadata_partition_agg(spark, catalog_dir, sql, entries)
-    if meta is None:
-        meta = _metadata_partition_group(spark, catalog_dir, sql, entries)
-    if meta is not None:
-        return meta
+    for answer in (
+        _metadata_count, _metadata_range_count, _metadata_agg,
+        _metadata_partition_agg, _metadata_partition_group,
+    ):
+        meta = answer(spark, catalog_dir, sql, entries)
+        if meta is not None:
+            return meta
+    text = _rewrite_time_travel(spark, catalog_dir, sql)
     # stats-guided TOP-K file pruning first (round 13): it understands
     # the ORDER BY … LIMIT tail and composes the WHERE claims itself;
-    # statements it declines fall through to the general pruner
+    # statements it declines fall through to the plan-driven pruner
     pruned = _topk_attach(spark, catalog_dir, sql, entries)
     if pruned is None:
-        pruned = _pruned_attach(spark, catalog_dir, sql, entries)
+        # the statement analyzes ONCE over the plain attach and the
+        # pruner reads that plan; only a statement where some table got
+        # a claim re-analyzes.  Time travel keeps the plain attach
+        df = spark.sql(text)
+        if text != sql:
+            return df
+        pruned = _pruned_attach(spark, catalog_dir, sql, entries, df=df)
+        if not pruned:
+            return df
     try:
-        df = spark.sql(_rewrite_time_travel(spark, catalog_dir, sql))
+        df = spark.sql(text)
     finally:
-        if pruned:
-            # spark.sql analyzed EAGERLY (the plan holds the pruned
-            # scan); restore the PLAIN views so a direct
-            # spark.sql/spark.table outside this executor never sees a
-            # statement's filtered, file-pruned subset lingering under
-            # a table's name — ALSO on an analysis error (review,
-            # round 11): a failed statement must not leave pruned
-            # views behind for the rest of the session.  The restore
-            # re-registers each SAVED prior view (its plan is already
-            # analyzed) — a catalog re-attach would pay a manifest
-            # read + relation build per table per statement
-            for nm, prior in pruned.items():
-                prior.createOrReplaceTempView(nm)
+        # spark.sql analyzed EAGERLY (the plan holds the pruned scan);
+        # restore the saved PLAIN views — also on an analysis error — so
+        # no pruned subset lingers under a table's name
+        for nm, prior in pruned.items():
+            prior.createOrReplaceTempView(nm)
     return df
 
 
-#: depth-0 keywords that END a WHERE clause body — every trailing
-#: clause Spark can parse after WHERE, listed EXPLICITLY so the body
-#: is delimited by design rather than by a trailing clause's tokens
-#: accidentally breaking the last conjunct's literal shape (advice,
-#: round 12: OFFSET/DISTRIBUTE/SORT/CLUSTER/WINDOW were delimited only
-#: by that accident)
+#: statement-pruning decision records — one DEBUG record per SELECT the
+#: plan walk reads, carrying per catalog table the files total and kept
+#: or the reason the table kept its plain attach
+_log = logging.getLogger(__name__)
+
+_EPOCH_DATE = datetime.date(1970, 1, 1)
+_EPOCH_TS = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+
+#: comparison node → claim side with the attribute on the LEFT / RIGHT;
+#: strict bounds claim their inclusive superset (the filter re-applies)
+_COMPARISONS = {
+    "EqualTo": ("eq", "eq"),
+    "GreaterThanOrEqual": ("lo", "hi"),
+    "GreaterThan": ("lo", "hi"),
+    "LessThanOrEqual": ("hi", "lo"),
+    "LessThan": ("hi", "lo"),
+}
+
+
+def _pruned_attach(
+    spark: SparkSession,
+    catalog_dir: str,
+    sql: str,
+    entries: dict | None = None,
+    df: DataFrame | None = None,
+) -> dict | None:
+    """STATEMENT-LEVEL manifest pruning driven by Catalyst's optimized
+    plan: a catalog table whose every data-file scan sits directly under
+    a typed ``Filter`` re-registers its temp view as
+    `read_snapshot_pruned` over the claims those filters imply, so
+    manifest stats, blooms and hidden-partition values skip FILES.
+    Returns ``{name: prior_plain_view}`` for the re-registered tables
+    (the caller restores them after analysis), or None.  ``df`` is the
+    statement already analyzed over the plain attach.
+
+    Soundness: the optimized plan equals the statement for ANY contents
+    of its scans, and each scan of table T reads only the rows its own
+    ``Filter(c_i)`` keeps — so narrowing T to C = OR(c_i) changes no
+    scan's output, and the pruned view re-applies C.  Claims weaken C
+    (`_claims`: typed attribute-vs-literal ``=`` / ``IN`` / range /
+    ``StartsWith`` and partition-transform equalities, through AND and
+    OR).  Catalyst has already resolved CTEs, subqueries, join sides,
+    literal types and time zones: a null-extended side's filter stays
+    above its join, self-joins and UNIONs OR their scans' filters.
+
+    A table keeps the plain attach when a scan of its files has no
+    ``Filter`` directly above it ("unfiltered scan"), a scan under its
+    root reads files that are neither its data nor its delete lists
+    ("unmapped relation"), no claim survives ("no claimable
+    conjunct"), or the claims skip no file.  Views and materialized
+    views never prune; a cached fragment (``InMemoryRelation``) hides
+    the scans it replaced, so the whole statement keeps the plain
+    attach."""
+    if df is None:
+        try:
+            df = spark.sql(sql)
+        except Exception:
+            return None  # Spark rejects the statement: nothing to prune
+    if entries is None:
+        entries = cat.catalog_entries(catalog_dir)
+    try:
+        scans = _plan_scans(df._jdf.queryExecution().optimizedPlan())
+        state = None if scans is None else _walk(spark, entries, scans)
+    except Exception:  # an unreadable plan: the plain attach stands
+        _log.debug("select pruning: plan walk failed", exc_info=True)
+        return None
+    if state is None:
+        _log.debug("select pruning: cached plan fragment, plain attach")
+        return None
+    pruned: dict = {}
+    for nm, st in state.items():
+        if "refused" in st:
+            continue
+        if not st.get("claims"):
+            st["refused"] = "no claimable conjunct"
+            continue
+        args = _pruned_read_args(st["claims"])
+        try:
+            keep = sn._prune_keep(st["m"], **args)
+            st["kept"] = len(keep)
+            if len(keep) == len(st["data"]):
+                continue  # the claims skip no file: keep the plain attach
+            prior = spark.table(nm)
+            view = sn.read_snapshot_pruned(
+                spark, st["root"], version=st["version"], _keep=keep, **args
+            )
+            view.schema  # force analysis NOW: an unanalyzable pruned
+            # view must fall back to the plain attach, not fail the
+            # statement
+        except Exception as exc:
+            st["refused"] = f"pruned read failed: {type(exc).__name__}"
+            continue
+        view.createOrReplaceTempView(nm)
+        pruned[nm] = prior
+    if _log.isEnabledFor(logging.DEBUG):
+        record = {
+            nm: {"files": len(st["data"]), **{
+                k: st[k] for k in ("kept", "refused") if k in st
+            }}
+            for nm, st in state.items()
+        }
+        _log.debug("select pruning %s", json.dumps(record, sort_keys=True),
+                   extra={"pruning": record})
+    return pruned or None
+
+
+def _plan_scans(plan) -> list | None:
+    """``(relation, filter condition or None)`` for every
+    ``LogicalRelation`` in an optimized plan and in its subquery plans
+    — the condition is the ``Filter`` directly above the scan.  None
+    when a cached fragment (``InMemoryRelation``) stands in for scans
+    the walk cannot see."""
+    out = []
+    subs = plan.subqueriesAll()
+    stack = [plan] + [subs.apply(i) for i in range(subs.size())]
+    while stack:
+        node = stack.pop()
+        kind = node.nodeName()
+        if kind == "InMemoryRelation":
+            return None
+        if kind == "LogicalRelation":
+            out.append((node, None))
+            continue
+        if kind == "Filter" and node.child().nodeName() == "LogicalRelation":
+            out.append((node.child(), node.condition()))
+            continue
+        ch = node.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+    return out
+
+
+def _walk(spark, entries: dict, scans: list) -> dict:
+    """Per catalog table, the walk state `_scan_claims` folds every scan
+    of its files into — a relation maps to the table whose root is the
+    nearest ancestor of its files (every table sharing that root)."""
+    roots: dict[str, list[str]] = {}
+    for nm, e in entries.items():
+        if e.get("kind") not in ("view", "mview"):
+            roots.setdefault(os.path.abspath(e["root"]), []).append(nm)
+    state: dict[str, dict] = {}
+    for rel, cond in scans:
+        fsrel = rel.relation()
+        if fsrel.getClass().getSimpleName() != "HadoopFsRelation":
+            continue
+        paths = [
+            _local_path(p)
+            for p in fsrel.location().rootPaths().mkString("\n").split("\n")
+        ]
+        root = os.path.dirname(paths[0])
+        while root not in roots and os.path.dirname(root) != root:
+            root = os.path.dirname(root)
+        rels = [os.path.relpath(p, root) for p in paths]
+        for nm in roots.get(root, ()):
+            if nm not in state:
+                try:
+                    state[nm] = _table_state(entries[nm])
+                except Exception:
+                    state[nm] = {"data": (), "refused": "unreadable manifest"}
+            if "refused" not in state[nm]:
+                _scan_claims(spark, nm, state[nm], rels, cond)
+    return state
+
+
+def _local_path(p: str) -> str:
+    """A Hadoop ``file:`` path string as a local absolute path."""
+    if p.startswith("file:"):
+        p = "/" + p[len("file:"):].lstrip("/")
+    return os.path.normpath(p)
+
+
+def _table_state(e: dict) -> dict:
+    """One catalog table's walk state: the pinned manifest's data and
+    delete-list files (root-relative) and, on an evolved table, the
+    per-file physical→field-id bindings and field-id→logical names."""
+    _pin, v_res = _entry_version(e, e["root"])
+    m = sn._read_manifest(e["root"], v_res)
+    return {
+        "root": e["root"],
+        "version": v_res,
+        "m": m,
+        "data": set(m["files"]),
+        "deletes": {d["file"] for d in m.get("delete_files") or []},
+        "fields": {fl["id"]: fl["name"] for fl in m.get("fields") or []},
+        "bindings": m.get("file_fields") or {},
+        "transforms": (m.get("layout") or {}).get("partition_transforms")
+        or {},
+    }
+
+
+def _scan_claims(spark, name: str, st: dict, rels: list, cond) -> None:
+    """Fold one scan of a table's files into its walk state: a delete
+    list scan is skipped, a scan of files the pinned manifest does not
+    list as data (or of mixed evolved-schema bindings) or with no
+    ``Filter`` refuses the table, and a filtered scan ORs its claims
+    into the table's."""
+    if all(f in st["deletes"] for f in rels):
+        return
+    bind = st["bindings"].get(rels[0]) if st["fields"] else None
+    if not all(f in st["data"] for f in rels) or (
+        st["fields"]
+        and (bind is None or any(st["bindings"].get(f) != bind for f in rels))
+    ):
+        st["refused"] = "unmapped relation"
+        return
+    if cond is None:
+        st["refused"] = "unfiltered scan"
+        return
+    col_of = str if bind is None else {
+        p: st["fields"].get(i) for p, i in bind.items()
+    }.get
+    try:
+        c = _claims(
+            cond, col_of, lambda e: _transform_of(spark, name, st, e, col_of)
+        )
+    except Exception:
+        c = {}  # an expression this walk cannot read claims nothing
+    st["claims"] = c if "claims" not in st else _or(st["claims"], c)
+
+
+def _transform_of(spark, name: str, st: dict, expr, col_of) -> str | None:
+    """The partition name whose transform is ``expr`` (an optimized-plan
+    expression over one scan's attributes), matched structurally
+    against each transform analyzed over the table's plain view."""
+    if not st["transforms"]:
+        return None
+    keys = st.get("transform_keys")
+    if keys is None:
+        keys = st["transform_keys"] = {}
+        try:
+            proj = (
+                spark.table(name)
+                .selectExpr(*st["transforms"].values())
+                ._jdf.queryExecution()
+                .analyzed()
+                .projectList()
+            )
+            for k, pname in enumerate(st["transforms"]):
+                keys[_expr_key(proj.apply(k).child(), str)] = pname
+        except Exception:
+            pass  # an unanalyzable transform claims nothing
+    return keys.get(_expr_key(expr, col_of))
+
+
+def _expr_key(e, col_of) -> tuple:
+    """Structural identity of an expression: node kinds and result
+    types, attributes by lower-cased logical name, foldable subtrees by
+    their value — so a transform's analyzed ``a % CAST(4 AS BIGINT)``
+    matches the optimizer's constant-folded ``a % 4L``."""
+    kind = e.nodeName()
+    t = e.dataType().simpleString()
+    if kind == "AttributeReference":
+        return ("attr", str(col_of(e.name()) or "").lower())
+    if e.foldable():
+        return ("lit", t, str(e.eval(None)))
+    ch = e.children()
+    return (kind, t, tuple(_expr_key(ch.apply(i), col_of) for i in range(ch.size())))
+
+
+def _value(raw, t: str):
+    """A Catalyst literal's internal value as the python value the
+    pruned reader compares and re-applies, or None (no claim): integral
+    and string values as is, DATE days and TIMESTAMP microseconds as
+    date / UTC datetime, finite floats."""
+    if raw is None:
+        return None
+    if t in _INTEGRAL:
+        return int(raw)
+    if t == "string":
+        return str(raw)
+    if t == "date":
+        return _EPOCH_DATE + datetime.timedelta(days=int(raw))
+    if t == "timestamp":
+        return _EPOCH_TS + datetime.timedelta(microseconds=int(raw))
+    if t in ("float", "double"):
+        f = float(raw)
+        return f if f == f else None
+    return None
+
+
+def _literal(e) -> tuple[str, object] | None:
+    """``(type, python value)`` of a non-NULL literal of a claimable
+    type, else None."""
+    if e.nodeName() != "Literal":
+        return None
+    t = e.dataType().simpleString()
+    v = _value(e.value(), t)
+    return None if v is None else (t, v)
+
+
+def _claims(e, col_of, part_of) -> dict:
+    """Pruning claims one filter condition implies: ``{("c", col):
+    ("in", values) | ("range", lo, hi), ("s", col): prefix, ("p",
+    pname): partition strings}`` — logical column names via
+    ``col_of(physical)``, partition names via ``part_of(expr)``.  An
+    empty dict claims nothing."""
+    kind = e.nodeName()
+    if kind in ("And", "Or"):
+        a = _claims(e.left(), col_of, part_of)
+        b = _claims(e.right(), col_of, part_of) if a or kind == "And" else {}
+        return _and(a, b) if kind == "And" else _or(a, b)
+    if kind in _COMPARISONS:
+        left, right = e.left(), e.right()
+        side = _COMPARISONS[kind][0]
+        if right.nodeName() != "Literal":
+            left, right = right, left
+            side = _COMPARISONS[kind][1]
+        lit = _literal(right)
+        if lit is None:
+            return {}
+        t, v = lit
+        if side == "eq":
+            return _point_claims(left, t, [v], col_of, part_of)
+        col = _column(left, col_of)
+        if col is None:
+            return {}
+        return {
+            ("c", col): ("range", v, None) if side == "lo"
+            else ("range", None, v)
+        }
+    if kind == "In":
+        t, vals = None, []
+        lst = e.list()
+        for i in range(lst.size()):
+            m = lst.apply(i)
+            if m.nodeName() == "Literal" and m.value() is None:
+                continue  # a NULL member never matches
+            lit = _literal(m)
+            if lit is None:
+                return {}  # an expression or unclaimable-type member
+            t = lit[0]
+            vals.append(lit[1])
+        return _point_claims(e.value(), t, vals, col_of, part_of) if vals else {}
+    if kind == "InSet":
+        t = e.child().dataType().simpleString()
+        h = e.hset()
+        # one py4j round trip for the whole set; a member carrying the
+        # separator shows up as a count mismatch and claims nothing.
+        # FLOAT members would print shorter than their float32 value
+        raw = h.mkString("\u0001").split("\u0001") if h.size() else []
+        if len(raw) != h.size() or t == "float":
+            return {}
+        vals = [_value(x, t) for x in raw]
+        if None in vals:
+            return {}
+        return _point_claims(e.child(), t, vals, col_of, part_of)
+    if kind == "StartsWith":
+        col = _column(e.left(), col_of)
+        lit = _literal(e.right())
+        if col is None or lit is None or lit[0] != "string" or not lit[1]:
+            return {}
+        return {("s", col): lit[1]}
+    return {}
+
+
+def _column(e, col_of) -> str | None:
+    """The logical column a bare attribute reads, else None."""
+    if e.nodeName() != "AttributeReference":
+        return None
+    return col_of(e.name())
+
+
+def _point_claims(e, t: str, vals: list, col_of, part_of) -> dict:
+    """Claims for ``e = v`` / ``e IN (vals)``: a value set on a bare
+    column, plus a partition-value set when ``e`` is a partition
+    transform whose output type records values faithfully (integral,
+    string, date — their python str() is Spark's string cast)."""
+    out = {}
+    col = _column(e, col_of)
+    if col is not None:
+        out[("c", col)] = ("in", frozenset(vals))
+    if t in _INTEGRAL or t in ("string", "date"):
+        pname = part_of(e)
+        if pname is not None:
+            out[("p", pname)] = frozenset(str(v) for v in vals)
+    return out
+
+
+def _and(a: dict, b: dict) -> dict:
+    """Claims of a conjunction: every claim of either side, two claims
+    on one key intersected."""
+    out = dict(a)
+    for k, c in b.items():
+        out[k] = _meet(out[k], c) if k in out else c
+    return out
+
+
+def _meet(x, y):
+    """The tighter of two claims on one key — an intersection when one
+    is representable, else either (both are implied)."""
+    if isinstance(x, frozenset):
+        return (x & y) or x
+    if isinstance(x, str):
+        return y if y.startswith(x) else x
+    if x[0] == "in" or y[0] == "in":
+        return x if x[0] == "in" else y
+    lo = x[1] if y[1] is None else y[1] if x[1] is None else max(x[1], y[1])
+    hi = x[2] if y[2] is None else y[2] if x[2] is None else min(x[2], y[2])
+    return ("range", lo, hi)
+
+
+def _or(a: dict, b: dict) -> dict:
+    """Claims of a disjunction: only keys both sides claim, each the
+    union of the two (an IN set, a range envelope, a common prefix)."""
+    out = {}
+    for k in a.keys() & b.keys():
+        u = _join(a[k], b[k])
+        if u is not None:
+            out[k] = u
+    return out
+
+
+def _join(x, y):
+    if isinstance(x, frozenset):
+        return x | y
+    if isinstance(x, str):
+        return os.path.commonprefix([x, y]) or None
+    if x[0] == "in" and y[0] == "in":
+        return ("in", x[1] | y[1])
+    (xl, xh), (yl, yh) = _bounds(x), _bounds(y)
+    lo = None if xl is None or yl is None else min(xl, yl)
+    hi = None if xh is None or yh is None else max(xh, yh)
+    return None if lo is None and hi is None else ("range", lo, hi)
+
+
+def _bounds(c) -> tuple:
+    return (min(c[1]), max(c[1])) if c[0] == "in" else (c[1], c[2])
+
+
+def _pruned_read_args(claims: dict) -> dict:
+    """Claims as `read_snapshot_pruned` keywords: int/str value sets
+    probe stats AND blooms per value (``point_eq`` / ``point_in``);
+    temporal and float sets claim their envelope as a range."""
+    args: dict = {}
+    for (kind, name), c in claims.items():
+        if kind == "p":
+            args.setdefault("partition_eq", {})[name] = sorted(c)
+        elif kind == "s":
+            args.setdefault("prefixes", {})[name] = c
+        elif c[0] == "in" and all(isinstance(v, (int, str)) for v in c[1]):
+            if len(c[1]) == 1:
+                args.setdefault("point_eq", {})[name] = next(iter(c[1]))
+            else:
+                args.setdefault("point_in", {})[name] = sorted(c[1])
+        else:
+            args.setdefault("ranges", {})[name] = _bounds(c)
+    return args
+
+
+#: depth-0 keywords that END a WHERE clause body (every trailing clause
+#: Spark can parse after WHERE)
 _WHERE_ENDS = (
     "GROUP", "ORDER", "LIMIT", "HAVING", "OFFSET", "DISTRIBUTE",
     "SORT", "CLUSTER", "WINDOW",
@@ -971,626 +1415,9 @@ _WHERE_ENDS = (
 _PRUNE_STOPS = {
     "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "VERSION",
     "TIMESTAMP", "AS", "ON", "JOIN", "UNION", ";",
-    # join-shape keywords: never aliases — the FROM parser must SEE
-    # them after a table item ('FROM t LEFT JOIN u' with 'LEFT' taken
-    # as t's alias would read an outer join as inner)
     "INNER", "LEFT", "RIGHT", "FULL", "OUTER", "CROSS", "NATURAL",
     "SEMI", "ANTI", "USING",
 }
-
-#: join-shape keywords, checked in JOIN POSITION (after a table item)
-#: so LEFT()/RIGHT() string functions elsewhere in the statement don't
-#: disable pruning (review, round 11).  Since round 12 the pruner
-#: UNDERSTANDS LEFT/RIGHT/SEMI/ANTI shapes (the preserved/probe side's
-#: own conjuncts prune; the null-extended or invisible side keeps the
-#: plain attach) and refuses only FULL/CROSS/NATURAL/USING.
-_NON_INNER = {
-    "LEFT", "RIGHT", "FULL", "OUTER", "CROSS", "NATURAL", "SEMI",
-    "ANTI", "USING",
-}
-
-#: join shapes that always keep the plain attach: FULL null-extends
-#: BOTH sides, CROSS without ON has no preserved-side argument to
-#: lean on, NATURAL/USING coalesce join columns (a conjunct on the
-#: coalesced name is not a single table's predicate)
-_PRUNE_REFUSED_SHAPES = {"FULL", "CROSS", "NATURAL", "OUTER", "USING"}
-
-
-def _pruned_attach(
-    spark: SparkSession,
-    catalog_dir: str,
-    sql: str,
-    entries: dict | None = None,
-) -> dict | None:
-    """STATEMENT-LEVEL manifest pruning for the SQL surface: when the
-    statement is one SELECT whose FROM is catalog relations joined
-    INNER (plain ``JOIN`` / comma) and its WHERE carries analyzable
-    conjuncts (``col = lit``, ``col BETWEEN a AND b``, ``col >= / > /
-    <= / < lit`` — one-sided bounds claim an open range; strict ops
-    claim their inclusive superset — ``col IN (literals)``, ``col LIKE
-    'prefix%'``, a partition-transform equality, parenthesized left
-    sides included), re-register EACH table's temp view as
-    `read_snapshot_pruned` over exactly ITS OWN conjuncts — manifest
-    stats, blooms, and hidden-partition values then skip FILES at plan
-    time, from plain SQL text.  Returns ``{name: prior_plain_view}``
-    for the re-registered tables (the caller restores each saved view
-    after analysis — no re-attach cost).
-
-    Multi-table attribution (round 11 — the star-join pattern: a fact
-    table pruned by its date window while joining dims): a conjunct
-    belongs to the table its qualifier names, or — unqualified — to
-    the ONE table whose schema carries the column; expression-led
-    conjuncts are offered to every table's partition-transform
-    matcher (two tables can only both match if the statement is
-    ambiguous, which Spark then rejects).  Sound for inner joins
-    because the WHERE is conjunctive over the join result: a
-    surviving row's match in table T satisfies T's conjuncts, so
-    files provably disjoint from them cannot contribute.
-
-    OUTER/SEMI/ANTI shapes (round 12 — the most common BI statement,
-    ``fact LEFT JOIN dim … WHERE fact.ts >= …``, previously paid a
-    full-table attach): the PRESERVED side of a LEFT/RIGHT join and
-    the PROBE side of SEMI/ANTI prune by their own conjuncts with the
-    identical argument — every output row binds that side's columns
-    from a real row of it.  The null-extendable side (LEFT's right,
-    RIGHT's whole left-assoc prefix) keeps the plain attach: pruning
-    it could convert a matched row into a null-extended one (changing
-    column values, not just dropping rows), and pruning an ANTI's
-    right side would ADD rows.  SEMI/ANTI right sides are also
-    excluded from unqualified-column ownership — their columns are
-    invisible in the WHERE, so a name shared with the probe side
-    resolves to the probe (as Spark resolves it).  FULL / CROSS /
-    NATURAL / USING shapes and self-joins keep the plain attach.
-
-    This replaces the round-10 DataSource-pushdown routing, WITHDRAWN
-    after measurement: Spark 4.1 keeps ONE Python-DataSource read plan
-    per relation (last scan planned wins for every scan), so per-scan
-    file pruning inside pushFilters silently LOSES ROWS whenever a
-    relation is scanned twice (a UNION over one view, or simply
-    reusing a DataFrame after a filtered query) — reproduced and
-    pinned in tests/test_snapshot_source.py.  Pruning at the
-    STATEMENT layer has no such hazard: the view built here is plain
-    parquet scans over a file list this code chose, re-applies every
-    predicate it pruned with, and lives only until the next
-    statement's attach.
-
-    CTE statements (round 13 — VERDICT r12 'Next round #2'): a plain
-    ``WITH j AS (SELECT … FROM fact WHERE …) SELECT … FROM j JOIN dim
-    … WHERE dim.x = …`` claims each CTE body's own conjuncts for that
-    body's tables AND the main query's conjuncts for its directly
-    referenced tables — per-SELECT units, each with the single-SELECT
-    soundness argument, composed under a ONCE-ONLY rule (a table
-    referenced outside its claiming unit keeps the plain attach, since
-    the one pruned view would serve every scan of the name).
-    RECURSIVE, nested WITH, CTE column lists, duplicate or
-    catalog-shadowing CTE names all keep the plain attach; a unit
-    containing a CTE relation claims only QUALIFIER-attributed
-    conjuncts (the CTE's schema is unknown to this layer).
-
-    Conservative by construction: any shape beyond the above — set
-    ops, subqueries, non-understood joins, non-conjunctive WHERE —
-    keeps the plain attach (full scan, row-group pushdown).  A SAME-COLUMN disjunction (top-level or one
-    parenthesized conjunct) claims through `_parse_disjunction`
-    (round 12): all-equality forms as an IN list, range unions as
-    their envelope; a mixed-column OR claims nothing.  A conjunct it
-    cannot parse is simply not used for pruning; `read_snapshot_
-    pruned` re-applies what IS used, so the rewrite can only ever
-    skip provably-disjoint files."""
-    toks = [t for t, _l, _h in _tokens(sql)]
-    up = [t.upper() for t in toks]
-    if any(k in up for k in ("UNION", "INTERSECT", "EXCEPT", "LATERAL")):
-        return
-    if "IDENTIFIER" in up:
-        return  # IDENTIFIER('t') names a relation through a STRING
-        # (possibly computed) — invisible to the token-level
-        # once-only/occurrence accounting, so a second reference to a
-        # claimed table could silently read the pruned view (review,
-        # round 13; reproduced through a CTE unit)
-    if _has_asof(up):
-        return  # time travel: `_rewrite_time_travel` owns the
-        # statement — pruning here would race the view rewrite
-    toks = _collapse_typed_literals(toks)
-    up = [t.upper() for t in toks]
-    if entries is None:
-        entries = cat.catalog_entries(catalog_dir)
-    by_lower = {n.lower(): n for n in entries}
-    # CTE statements (round 13 — VERDICT r12 'Next round #2', the
-    # most common real-user spelling of the already-prunable shapes):
-    # split `WITH j AS (…) [, …] <main>` into per-SELECT UNITS, claim
-    # each unit's own WHERE conjuncts for ITS catalog tables with the
-    # identical per-unit soundness argument, and refuse any table
-    # referenced outside its claiming unit (one pruned view cannot
-    # serve two scans).  RECURSIVE, nested WITH, CTE column lists,
-    # and a CTE shadowing a catalog name all keep the plain attach.
-    cte_names: set[str] = set()
-    units: list[list[str]] = [toks]
-    if up and up[0] == "WITH":
-        split = _split_cte_units(toks, up)
-        if split is None:
-            return
-        ctes, main = split
-        cte_names = {c.lower() for c, _b in ctes}
-        if len(cte_names) != len(ctes):
-            return  # duplicate CTE names: Spark rejects the statement
-        if any(c in by_lower for c in cte_names):
-            return  # a CTE SHADOWING a catalog table: Spark resolves
-            # the CTE, so claiming the table would prune a different
-            # relation than the one the statement reads
-        units = [b for _c, b in ctes] + [main]
-        if any("WITH" in {t.upper() for t in u} for u in units):
-            return  # nested WITH: refuse wholesale
-    elif "SELECT" not in up or "FROM" not in up:
-        return  # per-unit SELECT/FROM counting moved into
-        # `_select_unit_claims` (round 14): a unit masks its
-        # subquery spans first, so `id IN (SELECT …)` no longer
-        # trips the single-SELECT guard
-    # a subquery anywhere means a relation can be scanned INSIDE a
-    # span: enforce the once-only rule (below) exactly as for CTE
-    # statements, over these UNMASKED tokens
-    has_subq = any(
-        t == "(" and k + 1 < len(up) and up[k + 1] in _SUBQ_OPENERS
-        for k, t in enumerate(toks)
-    )
-    multi = len(units) > 1 or has_subq
-    merged: dict[str, tuple | None] = {}
-    for u in units:
-        res = _select_unit_claims(spark, u, entries, by_lower, cte_names)
-        for nm, alias, conj, flts, ok in res or []:
-            if not ok or not (conj or flts):
-                continue
-            # ONE unit's claims per table — a second claiming unit
-            # refuses the table (one view cannot serve two scans
-            # pruned by different predicates)
-            merged[nm] = None if nm in merged else (alias, conj, flts)
-    pruned: dict = {}
-    for nm, c in merged.items():
-        if c is None:
-            continue
-        if multi and _relation_occurrences(toks, nm.lower()) != 1:
-            continue  # the table is referenced OUTSIDE its claiming
-            # unit (another unit, a shape this walker refused): the
-            # single pruned view would wrongly serve that scan too
-        e = entries[nm]
-        if e.get("kind") in ("view", "mview"):
-            continue
-        alias, conj, flts = c
-        quals = {nm.lower(), (alias or nm).lower()}
-        try:
-            prior = _prune_one(spark, e, nm, quals, conj, flts)
-        except Exception:
-            # this table keeps the plain attach — and a raise must not
-            # escape with EARLIER tables' pruned views already in
-            # place (review, round 11: the caller's restore only runs
-            # when this function returns)
-            continue
-        if prior is not None:
-            pruned[nm] = prior
-    return pruned or None
-
-
-def _split_cte_units(toks: list[str], up: list[str]):
-    """Parse a leading WITH clause into ``([(name, body_tokens), …],
-    main_tokens)`` — None for any shape beyond plain ``WITH n AS
-    ( … ) [, …] <main>``: RECURSIVE, a column-list ``n (a, b) AS``,
-    an unbalanced body, a dangling comma, an empty main."""
-    i = 1
-    ctes: list[tuple[str, list[str]]] = []
-    while True:
-        if (
-            i >= len(toks)
-            or up[i] == "RECURSIVE"
-            or not re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", toks[i])
-        ):
-            return None
-        name = toks[i]
-        i += 1
-        if i + 1 >= len(toks) or up[i] != "AS" or toks[i + 1] != "(":
-            return None
-        depth = 0
-        j = i + 1
-        while j < len(toks):
-            if toks[j] == "(":
-                depth += 1
-            elif toks[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        if j >= len(toks):
-            return None  # unbalanced: Spark will reject the statement
-        ctes.append((name, toks[i + 2 : j]))
-        i = j + 1
-        if i < len(toks) and toks[i] == ",":
-            i += 1
-            continue
-        break
-    main = toks[i:]
-    if not main:
-        return None
-    return ctes, main
-
-
-#: opaque replacement for a masked subquery span — contains characters
-#: no identifier/literal regex accepts, so every claim parser downstream
-#: fails on it and the containing conjunct contributes NO claims
-_SUBQ_MASK = "<subquery>"
-
-#: every token that can OPEN a subquery body right after ``(`` in Spark
-#: SQL: plain SELECT, ``TABLE t`` shorthand, a VALUES relation, a
-#: WITH-prefixed body, and the piped ``FROM t SELECT …`` spelling.  In
-#: a SELECT statement none of these can follow ``(`` in any other role,
-#: and masking a span that is NOT a subquery only refuses claims —
-#: conservative, never wrong rows.
-_SUBQ_OPENERS = frozenset(("SELECT", "TABLE", "VALUES", "WITH", "FROM"))
-
-
-def _mask_subquery_spans(toks: list[str], up: list[str]):
-    """Replace each depth-balanced parenthesized span whose first
-    token is a subquery opener (`_SUBQ_OPENERS`: SELECT, and the
-    TABLE/VALUES/WITH/FROM body forms — review, round 14: ``k IN
-    (TABLE t)`` is a subquery too, and an undetected span would skip
-    the once-only rule and serve the pruned view to the subquery's
-    scan) — an IN/EXISTS/scalar SUBQUERY — with the single
-    opaque token `_SUBQ_MASK`, returning ``(masked_toks, spans)`` with
-    ``spans`` the original interior token lists (round 14 — VERDICT
-    r13 'Next round #1': the most common BI spelling, ``WHERE ts >= X
-    AND id IN (SELECT …)``, previously kept the plain attach because
-    the single-SELECT unit guard saw two SELECTs).  The masked span is
-    exactly the `_split_conjuncts` residual story: the conjunct that
-    carries it fails every claim parser and claims nothing, while the
-    REMAINING conjuncts still claim soundly — the WHERE is conjunctive
-    over the join result, so every output row satisfies them
-    regardless of what the subquery computes.  ``None`` for an
-    unbalanced span (Spark rejects the statement anyway)."""
-    out: list[str] = []
-    spans: list[list[str]] = []
-    i, n = 0, len(toks)
-    while i < n:
-        if toks[i] == "(" and i + 1 < n and up[i + 1] in _SUBQ_OPENERS:
-            depth = 0
-            j = i
-            while j < n:
-                if toks[j] == "(":
-                    depth += 1
-                elif toks[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            if j >= n:
-                return None
-            spans.append(toks[i + 1 : j])
-            out.append(_SUBQ_MASK)
-            i = j + 1
-            continue
-        out.append(toks[i])
-        i += 1
-    return out, spans
-
-
-def _relation_occurrences(toks: list[str], name_lower: str) -> int:
-    """How many tokens could be a RELATION reference to ``name`` — any
-    bare occurrence not followed by ``.`` (a qualifier use).  Counts a
-    same-named unqualified COLUMN too: conservative by design, the
-    caller only REFUSES claims on a count above one, never mints
-    one."""
-    n = 0
-    for k, t in enumerate(toks):
-        if t.strip("`").lower() != name_lower:
-            continue
-        if k + 1 < len(toks) and toks[k + 1] == ".":
-            continue
-        n += 1
-    return n
-
-
-def _select_unit_claims(
-    spark: SparkSession,
-    toks: list[str],
-    entries: dict,
-    by_lower: dict,
-    cte_names: set[str],
-):
-    """Per-table WHERE-conjunct claims for ONE plain SELECT's tokens —
-    `_pruned_attach`'s walker, factored out in round 13 so CTE bodies
-    and the main query each analyze as a unit: ``[(name, alias,
-    conjuncts, float_conjuncts, prunable), …]`` over the unit's
-    CATALOG relations, or None when the unit makes no claims.  A
-    relation naming a CTE participates in the join-shape walk but is
-    never claimed, its qualifiers attribute nothing, and its UNKNOWN
-    schema disables unqualified-column ownership and expression-led
-    transform claims for the whole unit (either might resolve into the
-    CTE).
-
-    SUBQUERY conjuncts (round 14 — VERDICT r13 'Next round #1'): each
-    ``( SELECT … )`` span is MASKED to one opaque token first, so
-    ``WHERE ts >= X AND id IN (SELECT …)`` claims the outer conjuncts
-    while the subquery conjunct claims nothing — sound because the
-    WHERE is conjunctive over the join result.  A span carrying a
-    CORRELATED qualifier (any outer table name, alias, or CTE
-    qualifier used as ``q.`` inside the span) refuses the whole unit:
-    conservative, the span's internal scoping is invisible to this
-    layer.  The caller additionally enforces the once-only relation
-    rule over the UNMASKED statement, so a table scanned both outside
-    and inside a span is never pruned (the one pruned view would
-    wrongly serve the subquery's scan)."""
-    # a fully parenthesized unit unwraps first (it would otherwise
-    # mask into one opaque span and refuse)
-    toks = _strip_span_parens(toks)
-    up = [t.upper() for t in toks]
-    masked = _mask_subquery_spans(toks, up)
-    if masked is None:
-        return None
-    toks, subq_spans = masked
-    up = [t.upper() for t in toks]
-    if up.count("SELECT") != 1 or up.count("FROM") != 1:
-        return None
-    i = up.index("FROM")
-    # FROM clause: name [AS alias] ((, | [shape] JOIN) name [AS alias]
-    # [ON ...])*.  Per-table PRUNABILITY rides along (round 12): a
-    # table is prunable by its own WHERE conjuncts iff it is never on
-    # the null-producing side of an outer join in the (left-assoc)
-    # join tree — LEFT JOIN's right side and RIGHT JOIN's whole left
-    # prefix are null-extendable (pruning them could CONVERT a matched
-    # row into a null-extended one, changing other columns' values,
-    # not just dropping rows); SEMI/ANTI right sides are INVISIBLE to
-    # the WHERE (and pruning an ANTI's right side would ADD rows).
-    # The preserved/probe side's own conjuncts prune exactly as in the
-    # inner case: every surviving output row binds that table's
-    # columns from a real row of it, so files provably disjoint from
-    # a conjunct cannot contribute.
-    tables: list[tuple[str | None, str | None, str]] = []
-    prunable: list[bool] = []
-    invisible: list[bool] = []  # semi/anti right sides (no WHERE cols)
-    next_prunable, next_invisible = True, False
-    j = i + 1
-    while True:
-        if j >= len(toks):
-            break
-        raw = toks[j].strip("`").lower()
-        is_cte = raw in cte_names
-        nm = None if is_cte else by_lower.get(raw)
-        if nm is None and not is_cte:
-            return None  # subquery / IDENTIFIER / non-catalog relation
-        j += 1
-        alias = None
-        if j < len(toks) and up[j] == "AS":
-            j += 1
-        if (
-            j < len(toks)
-            and up[j] not in _PRUNE_STOPS
-            and toks[j] != ","
-            and re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", toks[j])
-        ):
-            alias = toks[j]
-            j += 1
-        tables.append((nm, alias, raw))
-        prunable.append(next_prunable)
-        invisible.append(next_invisible)
-        if j < len(toks) and up[j] == "ON":
-            # skip the ON expression (depth-aware) to the next join
-            # item or clause keyword — its conditions are join
-            # predicates, never pruning claims
-            depth = 0
-            j += 1
-            while j < len(toks):
-                t = toks[j]
-                if t == "(":
-                    depth += 1
-                elif t == ")":
-                    depth -= 1
-                elif depth == 0 and (
-                    up[j] in _NON_INNER
-                    or up[j] in ("INNER", "JOIN", "WHERE", ";")
-                    or up[j] in _WHERE_ENDS
-                ):
-                    break
-                j += 1
-        if j >= len(toks):
-            break
-        # ---- join shape of the NEXT item --------------------------
-        next_prunable, next_invisible = True, False
-        shaped = False
-        u = up[j]
-        if u in _PRUNE_REFUSED_SHAPES:
-            return  # FULL/CROSS/NATURAL/USING (or a bare OUTER):
-            # plain attach — no per-side soundness argument here
-        if u == "LEFT":
-            j += 1
-            shaped = True
-            u2 = up[j] if j < len(toks) else ""
-            if u2 == "OUTER":
-                j += 1
-                next_prunable = False  # null-extended side
-            elif u2 in ("SEMI", "ANTI"):
-                j += 1
-                next_prunable, next_invisible = False, True
-            else:
-                next_prunable = False  # plain LEFT JOIN
-        elif u == "RIGHT":
-            j += 1
-            shaped = True
-            if j < len(toks) and up[j] == "OUTER":
-                j += 1
-            # left-assoc: the whole prefix joined so far is the
-            # null-extendable side; the joined table is preserved
-            prunable = [False] * len(prunable)
-        elif u in ("SEMI", "ANTI"):
-            j += 1
-            shaped = True
-            next_prunable, next_invisible = False, True
-        elif u == "INNER":
-            j += 1
-            shaped = True  # INNER JOIN is the default spelled out
-        if j < len(toks) and up[j] == "JOIN":
-            j += 1
-            continue
-        if not shaped and j < len(toks) and toks[j] == ",":
-            j += 1  # comma join: inner under a conjunctive WHERE
-            continue
-        if shaped:
-            return  # a shape keyword not followed by JOIN: not a FROM
-            # this walker understands — keep the plain attach
-        break
-    names = [nm for nm, _a, _r in tables if nm is not None]
-    if not names or len(set(names)) != len(names):
-        return None  # nothing claimable, or a self-join (one view per
-        # NAME cannot serve two different pruned file sets)
-    # the WHERE must FOLLOW the FROM at depth 0 — an aggregate's
-    # FILTER (WHERE ...) in the select list is not the table predicate
-    w = None
-    depth = 0
-    for k in range(i + 1, len(toks)):
-        t = toks[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and up[k] == "WHERE":
-            w = k
-            break
-    if w is None:
-        return
-    # the WHERE clause body: up to a depth-0 GROUP/ORDER/LIMIT/HAVING
-    depth = 0
-    end = len(toks)
-    for k in range(w + 1, len(toks)):
-        t = toks[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and up[k] in _WHERE_ENDS:
-            end = k
-            break
-    body = toks[w + 1 : end]
-    conjuncts = _split_conjuncts(body)
-    if conjuncts is None:
-        # round 12: a PURE top-level disjunction (`day = 1 OR day = 2`)
-        # re-enters as ONE parenthesized conjunct — `_prune_one`'s
-        # disjunction parser claims it as an IN list / range envelope
-        # when every disjunct bounds the SAME column, and claims
-        # nothing otherwise (a mixed-column OR keeps the plain
-        # attach).  Bodies the parser can NEVER claim (depth-0
-        # CASE/NOT family) are refused HERE — wrapping them would pay
-        # _prune_one's per-table manifest-meta read per statement
-        # just to discover there are no claims (review, round 12).
-        bup = {t.upper() for t in body}
-        if bup & {"CASE", "WHEN", "THEN", "ELSE", "END", "NOT", "IS"}:
-            return
-        conjuncts = [["(", *body, ")"]]
-
-    # qualifier map: the alias when given, plus the bare name — a
-    # collision across tables bails (the statement is ambiguous)
-    qual_to_name: dict[str, str] = {}
-    cte_quals: set[str] = set()
-    for nm, alias, raw in tables:
-        if nm is None:
-            cte_quals |= {raw, (alias or raw).lower()}
-            continue
-        for q in {nm.lower(), (alias or nm).lower()}:
-            if qual_to_name.get(q, nm) != nm:
-                return None
-            qual_to_name[q] = nm
-    if cte_quals & set(qual_to_name):
-        return None  # a CTE name/alias colliding with a table
-        # qualifier: the statement is ambiguous (Spark rejects it)
-    if subq_spans:
-        # CORRELATED subqueries refuse the unit: an outer qualifier
-        # used inside a span means the span's result depends on the
-        # outer row in ways this token layer cannot scope (an inner
-        # alias could even shadow the name) — conservative, claims
-        # nothing rather than reasoning about it
-        outer_quals = set(qual_to_name) | cte_quals
-        for sp in subq_spans:
-            for k2 in range(len(sp) - 1):
-                if (
-                    sp[k2 + 1] == "."
-                    and sp[k2].strip("`").lower() in outer_quals
-                ):
-                    return None
-    has_cte = any(nm is None for nm, _a, _r in tables)
-    per: dict[str, list] = {nm: [] for nm in names}
-    floats: list = []  # expression-led: transform candidates for all
-    if len(tables) == 1:
-        per[names[0]] = conjuncts
-    else:
-        # schema fetch is LAZY (review, round 11): a fully qualifier-
-        # attributed WHERE — the common star-join spelling — never
-        # pays the per-table analysis round-trips
-        schemas: dict | None = None
-
-        def _schemas() -> dict | None:
-            nonlocal schemas
-            if schemas is None:
-                try:
-                    schemas = {
-                        nm: {
-                            f.name.lower()
-                            for f in spark.table(nm).schema.fields
-                        }
-                        for nm, _a, _r in tables
-                        if nm is not None
-                    }
-                except Exception:
-                    schemas = {}  # undescribable relation: no owners
-            return schemas
-
-        for c in conjuncts:
-            head = c
-            if c and c[0] == "(":
-                # a parenthesized disjunction attributes by its FIRST
-                # column reference (round 12); the disjunction parser
-                # then verifies every disjunct bounds that same column
-                # with a qualifier owned by the attributed table (a
-                # mixed-table OR fails its parse and claims nothing)
-                head = c[1:]
-                while head and head[0] == "(":
-                    head = head[1:]
-                if not head:
-                    continue
-            if (
-                len(head) >= 3
-                and head[1] == "."
-                and re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", head[0])
-            ):
-                nm = qual_to_name.get(head[0].lower())
-                if nm is not None:
-                    per[nm].append(c)
-                continue  # unknown qualifier: no claims
-            if head and re.fullmatch(r"[A-Za-z_`][A-Za-z_0-9`]*", head[0]):
-                if has_cte:
-                    continue  # the column might resolve into the
-                    # CTE's unknown schema: no ownership claim
-                col = head[0].strip("`").lower()
-                # SEMI/ANTI right sides are INVISIBLE in the WHERE
-                # (the join output carries only probe-side columns),
-                # so Spark resolves an unqualified name shared with
-                # the probe side to the PROBE table — mirror that, or
-                # the shared-name case would read as ambiguous and
-                # drop a sound probe-side claim (round 12)
-                owners = [
-                    nm
-                    for k, (nm, _a, _r) in enumerate(tables)
-                    if nm is not None
-                    and not invisible[k]
-                    and col in _schemas().get(nm, ())
-                ]
-                if len(owners) == 1:
-                    per[owners[0]].append(c)
-                    continue
-                if len(owners) > 1:
-                    continue  # ambiguous — Spark rejects the statement
-            floats.append(c)
-    if has_cte:
-        # an expression-led conjunct could reference CTE columns — a
-        # textual transform match against a table would be unsound
-        floats = []
-    return [
-        (nm, alias, per[nm], floats, prunable[k])
-        for k, (nm, alias, _r) in enumerate(tables)
-        if nm is not None
-    ]
 
 
 def _strip_one_row_limit(
@@ -1929,8 +1756,8 @@ def _range_claims(
     hi_strict)`` with conjunctive claims on one column INTERSECTED;
     ``partition_eq`` maps hidden-partition transform name → literal
     for equality conjuncts that token-match a declared transform with
-    an output-type-compatible literal.  Typing mirrors the pruner's
-    round-11 rules: int literals on integral columns; string literals
+    an output-type-compatible literal.  Typing rules (round 11):
+    int literals on integral columns; string literals
     on DATE as strict ISO, on TIMESTAMP via the faithful-parse rule
     under a UTC session only; ANSI ``TIMESTAMP '…'``/``DATE '…'``
     typed literals under the same gates (round 13).  Factored out of
@@ -1961,7 +1788,7 @@ def _range_claims(
         if t in ("date", "timestamp"):
             if isinstance(v, _TemporalLit):
                 # ANSI typed literal (round 13): same kind/type +
-                # UTC gates as the pruner's conjunct path
+                # UTC gates as the string spelling
                 return _ansi_bound(v, t, utc)
             if not isinstance(v, str) or (t == "timestamp" and not utc):
                 return None
@@ -2066,7 +1893,7 @@ def _metadata_range_count(
     incremental shape ``ts >= a AND ts < b`` this reads one or two
     files where a full aggregate scans the table.
 
-    Typing gates mirror the pruner's round-11 rules: int literals on
+    Typing gates (round 11): int literals on
     integral columns; string literals on DATE columns as strict
     ISO dates; on TIMESTAMP columns via the faithful-parse rule under
     a UTC session only (stats are UTC instants).  MIN/MAX columns
@@ -3427,8 +3254,7 @@ def _partition_literal_ok(spark, sdf, expr: str, v) -> bool:
     matches the TRANSFORM'S OUTPUT type (int on integral, str on
     string, strict YYYY-MM-DD str on date) — Spark coerces
     ``int_part = '01'`` to a match, but the recorded-string compare
-    would wrongly skip (round-11 soundness rule; shared by the pruner
-    and the metadata count so the copies cannot diverge)."""
+    would wrongly skip (round-11 soundness rule)."""
     from pyspark.sql import functions as F
 
     try:
@@ -3451,13 +3277,9 @@ def _partition_literal_ok(spark, sdf, expr: str, v) -> bool:
 def _split_conjuncts(body: list[str]):
     """Split a WHERE body's tokens into top-level conjuncts at depth-0
     ANDs (a depth-0 BETWEEN swallows its ONE following depth-0 AND) —
-    ``None`` when the body is not a plain conjunction.  A DEPTH-0 OR
-    makes it a disjunction; a depth-0 CASE's arms carry depth-0 ANDs
-    the splitter would mistake for boundaries, turning a CASE fragment
-    like `k > 3` into a false table-level claim (review, round 11).
-    An OR (or a subquery) INSIDE parentheses stays inside one
-    conjunct, which simply fails to parse downstream and contributes
-    no claims — the OTHER conjuncts still act soundly."""
+    ``None`` when the body is not a plain conjunction: a depth-0 OR, or
+    a depth-0 CASE whose arms carry ANDs the splitter would mistake for
+    boundaries (review, round 11)."""
     bup = [t.upper() for t in body]
     depth = 0
     for t, u in zip(body, bup):
@@ -3495,15 +3317,11 @@ def _split_conjuncts(body: list[str]):
 
 class _TemporalLit:
     """An ANSI typed temporal literal operand — ``TIMESTAMP '…'`` /
-    ``DATE '…'`` — carried as a VALUE through the claim machinery
-    (round 13, VERDICT r12 'Next round #3': the ANSI spelling used to
-    disable statement pruning wholesale via a statement-wide TIMESTAMP
-    token bail).  Claims fire only where the column's own type admits
-    the literal's kind (plus the UTC-session gate for timestamps);
-    everywhere else the conjunct claims nothing.  Deliberately NOT a
-    str/tuple subclass: every existing isinstance gate (point-equality
-    typing, IN-list typing, partition `_pv_ok`) must keep REJECTING it
-    rather than mistaking it for a raw string or a value list."""
+    ``DATE '…'`` — carried as a VALUE through the metadata claim
+    parsers (round 13).  Claims fire only where the column's own type
+    admits the literal's kind (plus the UTC-session gate for
+    timestamps).  Deliberately NOT a str subclass, so no string gate
+    mistakes it for a raw string."""
 
     __slots__ = ("kind", "text")
 
@@ -3514,10 +3332,8 @@ class _TemporalLit:
 
 def _has_asof(up: list[str]) -> bool:
     """True when the statement carries a time-travel ``VERSION AS OF``
-    / ``TIMESTAMP AS OF`` sequence — the round-13 narrowing of the old
-    statement-wide VERSION/TIMESTAMP token bail, which silenced
-    pruning for ANSI ``TIMESTAMP '…'`` literals and for any table with
-    a column literally named ``version``."""
+    / ``TIMESTAMP AS OF`` sequence (a bare ``TIMESTAMP '…'`` literal or
+    a column named ``version`` does not count)."""
     return any(
         up[k] in ("VERSION", "TIMESTAMP")
         and up[k + 1] == "AS"
@@ -3626,12 +3442,9 @@ def _strip_span_parens(c: list[str]) -> list[str]:
 
 def _parse_disjunction(c: list[str], col_of):
     """A fully parenthesized SAME-COLUMN literal disjunction —
-    ``(k = 1 OR k IN (2, 3) OR k BETWEEN 8 AND 9)`` — parsed to
-    pruning claims (round 12: VERDICT r11 'What's missing #2' — the
-    OR→IN normalization the round-11 ``point_in`` machinery was
-    missing).  ``col_of`` is the caller's qualifier-aware column
-    parser, so a foreign table's qualifier disqualifies a disjunct
-    exactly as it does a conjunct.
+    ``(k = 1 OR k IN (2, 3) OR k BETWEEN 8 AND 9)`` — parsed to the
+    metadata paths' claims (round 12).  ``col_of`` is the caller's
+    qualifier-aware column parser.
 
     Returns ``(col, eq_values_or_None, pairs)``: ``eq_values`` is the
     flat value list when EVERY disjunct is an equality/IN (the caller
@@ -3738,428 +3551,6 @@ def _parse_disjunction(c: list[str], col_of):
     return col0, vals, pairs
 
 
-def _envelope_bound(vals: list, t: str | None, utc: bool, pick):
-    """One side of a disjunction's range ENVELOPE, typed by the column
-    it bounds: numeric values fold numerically; strings fold lexically
-    on a STRING column (lexical IS that column's order) or as typed
-    date/datetime bounds on a temporal one (every value must parse,
-    timestamps additionally need a UTC session — the same gates as the
-    direct-range path).  ``None`` = that side makes no claim (mixed
-    families, an unparseable literal, an uncertifiable session)."""
-    if all(
-        isinstance(v, (int, float)) and not isinstance(v, bool)
-        for v in vals
-    ):
-        return pick(vals)
-    if all(isinstance(v, str) for v in vals):
-        if t == "string":
-            return pick(vals)
-        if t in ("date", "timestamp"):
-            typed = [_sql_temporal(v, t) for v in vals]
-            if None not in typed and (t == "date" or utc):
-                return pick(typed)
-        return None
-    if all(isinstance(v, (str, _TemporalLit)) for v in vals) and t in (
-        "date", "timestamp",
-    ):
-        # ANSI typed literals in a disjunction (round 13): same
-        # kind/type + UTC gates as the conjunct path
-        typed = [_ansi_bound(v, t, utc) for v in vals]
-        if None not in typed and (t == "date" or utc):
-            return pick(typed)
-    return None
-
-
-def _prune_one(
-    spark: SparkSession,
-    e: dict,
-    name: str,
-    quals: set[str],
-    conjuncts: list,
-    texpr_conjuncts: list,
-):
-    """Build one table's pruning claims from ITS conjuncts and
-    re-register its temp view as `read_snapshot_pruned` — returns the
-    PRIOR plain view's DataFrame when a pruned view replaced it (the
-    caller's restore re-registers it without any re-attach cost), or
-    None when the plain attach stands.  ``texpr_conjuncts`` are
-    unattributed expression-led conjuncts offered ONLY to the
-    partition-transform matcher (never parsed as column claims — a
-    foreign table's `v >= 0` must not poison this table's re-applied
-    predicate)."""
-    try:
-        # the plain attached view — the schema source AND the restore
-        # handle; without it there is nothing cheap to restore, so the
-        # plain attach stands
-        prior = spark.table(name)
-    except Exception:
-        return None
-
-    def _col(parts: list[str]) -> tuple[str | None, list[str]]:
-        # [q .] col — a foreign qualifier disqualifies the conjunct
-        if len(parts) >= 3 and parts[1] == ".":
-            if parts[0].lower() not in quals:
-                return None, parts
-            return parts[2].strip("`"), parts[3:]
-        if parts and re.fullmatch(r"[A-Za-z_`][A-Za-z_0-9`]*", parts[0]):
-            return parts[0].strip("`"), parts[1:]
-        return None, parts
-
-    ranges: dict = {}
-    point_eq: dict = {}
-    in_lists: dict = {}
-    like_prefixes: dict = {}
-    or_pairs: dict = {}  # same-column disjunctions -> envelope bounds
-    lo_b: dict = {}
-    hi_b: dict = {}
-    for c in conjuncts:
-        if c and c[0] == "(":
-            # a parenthesized SAME-COLUMN disjunction (round 12):
-            # all-equality forms claim the IN list (per-value stats +
-            # bloom evidence, the existing point_in machinery); range
-            # unions claim the envelope.  setdefault: a direct claim
-            # on the same column from another conjunct stands — both
-            # are implied by the WHERE, either alone is sound.
-            parsed = _parse_disjunction(list(c), _col)
-            if parsed is not None:
-                dcol, dvals, dpairs = parsed
-                if dvals is not None:
-                    in_lists.setdefault(dcol, dvals)
-                else:
-                    or_pairs.setdefault(dcol, dpairs)
-            continue
-        col, rest = _col(c)
-        if col is None or not rest:
-            continue
-        u0 = rest[0].upper()
-        if u0 == "BETWEEN" and len(rest) == 4 and rest[2].upper() == "AND":
-            a, b = _lit(rest[1]), _lit(rest[3])
-            if a is not None and b is not None:
-                ranges[col] = (a, b)
-        elif rest[0] == "=" and len(rest) == 2:
-            v = _lit(rest[1])
-            if v is not None:
-                point_eq[col] = v
-        elif rest[0] in (">=", ">") and len(rest) == 2:
-            # strict > claims as >= for PRUNING — a superset skip-test
-            # (a file holding only the exact bound is read, not lost);
-            # the statement's own WHERE enforces strictness
-            v = _lit(rest[1])
-            if v is not None:
-                lo_b[col] = v
-        elif rest[0] in ("<=", "<") and len(rest) == 2:
-            v = _lit(rest[1])
-            if v is not None:
-                hi_b[col] = v
-        elif u0 == "LIKE" and len(rest) == 2:
-            # prefix-only patterns ('abc%'): exactly one wildcard, at
-            # the end, no '_' or escape — anything else claims nothing
-            v = _lit(rest[1])
-            if (
-                isinstance(v, str)
-                and len(v) >= 2
-                and v.endswith("%")
-                and not any(ch in v[:-1] for ch in "%_\\")
-            ):
-                like_prefixes[col] = v[:-1]
-        elif (
-            u0 == "IN"
-            and len(rest) >= 4
-            and rest[1] == "("
-            and rest[-1] == ")"
-        ):
-            # col IN (lit, lit, ...) — ALL-literal lists only (a
-            # subquery or expression fails _lit and the conjunct
-            # contributes no claims)
-            inner = rest[2:-1]
-            vals = [_lit(t) for t in inner[0::2]]
-            commas_ok = all(t == "," for t in inner[1::2])
-            if commas_ok and vals and all(v is not None for v in vals):
-                in_lists[col] = vals
-    for col in set(lo_b) & set(hi_b):
-        ranges.setdefault(col, (lo_b[col], hi_b[col]))
-    # one-sided bounds claim an OPEN range (round 11): `ts >= a` alone
-    # — half of every incremental scan — skips files wholly below a
-    for col, v in lo_b.items():
-        if col not in hi_b:
-            ranges.setdefault(col, (v, None))
-    for col, v in hi_b.items():
-        if col not in lo_b:
-            ranges.setdefault(col, (None, v))
-    root = e["root"]
-    version, v_res = _entry_version(e, root)
-    if v_res is None:
-        return None
-    lay = sn._read_manifest_meta(root, v_res).get("layout") or {}
-    transforms = lay.get("partition_transforms") or {}
-    # HIDDEN-PARTITION pruning: a conjunct whose left side IS a
-    # transform's expression (token-normalized; qualifiers stripped)
-    # prunes by recorded partition value — `WHERE a % 4 = 2` on a
-    # table PARTITIONED BY (a % 4 AS bucket).  IN lists and
-    # same-transform disjunctions claim value SETS (round 12): a file
-    # skips when its recorded value matches none, and the reader
-    # re-applies isin().
-    partition_eq: dict = {}
-    if transforms:
-        texpr = _transform_texpr(transforms, quals)
-
-        def _texpr_head(parts: list[str]):
-            depth = 0
-            for k, t in enumerate(parts):
-                if t == "(":
-                    depth += 1
-                elif t == ")":
-                    depth -= 1
-                elif depth == 0 and (
-                    t in ("=", ">=", ">", "<=", "<")
-                    or t.upper() in ("IN", "BETWEEN")
-                ):
-                    if k == 0:
-                        return None, parts
-                    return _norm_tokens(parts[:k], quals), parts[k:]
-            return None, parts
-
-        for c in conjuncts + texpr_conjuncts:
-            if c and c[0] == "(":
-                parsed = _parse_disjunction(list(c), _texpr_head)
-                if parsed is None:
-                    continue
-                nh, vals, _pairs = parsed
-                pname = texpr.get(nh) if nh else None
-                if pname is not None and vals:
-                    partition_eq.setdefault(pname, vals)
-                continue
-            if len(c) >= 3 and c[-2] == "=":
-                v = _lit(c[-1])
-                pname = texpr.get(_norm_tokens(c[:-2], quals))
-                if v is not None and pname is not None:
-                    partition_eq[pname] = v
-                continue
-            split = _in_split(c) if len(c) >= 5 else None
-            if split is not None:
-                head, vals = split
-                pname = texpr.get(_norm_tokens(head, quals))
-                if pname is not None:
-                    partition_eq.setdefault(pname, vals)
-    ranges = {c: v for c, v in ranges.items() if c not in point_eq}
-    # literal CANONICALIZATION (review, rounds 10+11): a bloom probe
-    # hashes str(value), so a float (5.0) or zero-padded string ('05')
-    # equality on a bigint column would fake ABSENCE and silently drop
-    # rows; partition values compare as strings with the same hazard;
-    # and a timestamp's manifest stats are ISO 'T'-separated strings
-    # (_stat_primitive), so a plain `ts <= '2024-03-02 00:00:00'`
-    # literal sorts BELOW the stat for the same instant and would
-    # wrongly skip a boundary file.  Rules, all evidence-or-silence:
-    #   * point equality survives only when the literal's python type
-    #     matches the column family EXACTLY (int on integral, str on
-    #     string); every other equality demotes to a (v, v) RANGE.
-    #   * a str range bound on a DATE/TIMESTAMP column parses to a
-    #     typed date/datetime (Spark's own cast semantics) or the
-    #     conjunct is dropped; timestamp pruning additionally requires
-    #     a UTC session (parquet stats are UTC instants).  The typed
-    #     bound compares against string stats via the asymmetric
-    #     isoformat widening in `read_snapshot_pruned`.
-    #   * a partition equality survives only when the literal's type
-    #     matches the TRANSFORM'S OUTPUT type (int on integral, str on
-    #     string, strict YYYY-MM-DD str on date) — `int_part = '01'`
-    #     coerces to a match in Spark but fails a string compare, so
-    #     it must not prune (review, round 11).
-    integral = _INTEGRAL
-
-    def _pv_ok(v) -> bool:
-        if isinstance(v, (list, tuple)):
-            return bool(v) and all(_pv_ok(x) for x in v)
-        return isinstance(v, (int, str)) and not isinstance(v, bool)
-
-    partition_eq = {c: v for c, v in partition_eq.items() if _pv_ok(v)}
-    need_schema = (
-        bool(point_eq)
-        or bool(partition_eq)
-        or bool(in_lists)
-        or bool(like_prefixes)
-        or bool(or_pairs)
-        or any(
-            isinstance(b, (str, _TemporalLit))
-            for bounds in ranges.values()
-            for b in bounds
-        )
-    )
-    sdf = None
-    dtypes: dict = {}
-    if need_schema:
-        try:
-            # the PLAIN attached view (same pin as this entry) already
-            # carries the analyzed schema — reuse it instead of
-            # building a fresh read relation, which costs a parquet
-            # footer-read job per statement (measured ~0.2-0.4 s at
-            # sf0.1 in scripts/r11_evidence.py)
-            sdf = prior
-            dtypes = {
-                f.name.lower(): f.dataType.simpleString()
-                for f in sdf.schema.fields
-            }
-        except Exception:
-            return None
-    if partition_eq:
-        partition_eq = {
-            pname: v
-            for pname, v in partition_eq.items()
-            if all(
-                _partition_literal_ok(spark, sdf, transforms[pname], x)
-                for x in (v if isinstance(v, (list, tuple)) else [v])
-            )
-        }
-    if point_eq:
-        demote = {}
-        for c, v in list(point_eq.items()):
-            t = dtypes.get(c.lower())
-            ok = (
-                isinstance(v, int)
-                and not isinstance(v, bool)
-                and t in integral
-            ) or (isinstance(v, str) and t == "string")
-            if not ok:
-                demote[c] = (v, v)
-                del point_eq[c]
-        for c, r in demote.items():
-            ranges.setdefault(c, r)
-    # no-default get: Spark 4 VALIDATES a provided default against the
-    # conf spec ('' raises INVALID_CONF_VALUE), and the session
-    # timezone always resolves to something
-    utc = spark.conf.get("spark.sql.session.timeZone") in (
-        "UTC", "Etc/UTC", "GMT",
-    )
-    # IN lists follow the point-equality typing rule PER LIST: every
-    # value int on an integral column (or str on string) keeps the
-    # typed list — stats AND bloom evidence per value.  Anything else
-    # demotes to a (min, max) envelope ONLY when the ordering is the
-    # column's own: numeric values compare numerically; string values
-    # on a temporal column parse to typed bounds FIRST (review, round
-    # 11: a lexical min/max of ('9', '10') on a bigint column inverts
-    # to the always-false between('10', '9') and silently drops rows).
-    # Everything else claims nothing.
-    for c, vals in list(in_lists.items()):
-        t = dtypes.get(c.lower())
-        ok = (
-            all(
-                isinstance(v, int) and not isinstance(v, bool)
-                for v in vals
-            )
-            and t in integral
-        ) or (all(isinstance(v, str) for v in vals) and t == "string")
-        if not ok:
-            del in_lists[c]
-            if all(
-                isinstance(v, (int, float)) and not isinstance(v, bool)
-                for v in vals
-            ):
-                ranges.setdefault(c, (min(vals), max(vals)))
-            elif t in ("date", "timestamp") and all(
-                isinstance(v, (str, _TemporalLit)) for v in vals
-            ):
-                typed = [_ansi_bound(v, t, utc) for v in vals]
-                if None not in typed and (t == "date" or utc):
-                    ranges.setdefault(c, (min(typed), max(typed)))
-    # disjunction range ENVELOPES (round 12): each side of the union's
-    # [min-of-lows, max-of-highs] claims INDEPENDENTLY — a disjunct
-    # with an open side leaves that side unclaimed, and a side whose
-    # values cannot be folded under the column's own ordering
-    # (`_envelope_bound`) claims nothing there.  The envelope is
-    # implied by the disjunction, so re-applying it keeps every row
-    # the statement's WHERE keeps.
-    for c, pairs in or_pairs.items():
-        if c in point_eq:
-            continue  # the direct equality claim stands alone (a
-            # range on the same column would trip the reader's
-            # point/range collision guard)
-        t = dtypes.get(c.lower())
-        los = [p[0] for p in pairs]
-        his = [p[1] for p in pairs]
-        lo = (
-            _envelope_bound(los, t, utc, min)
-            if all(x is not None for x in los)
-            else None
-        )
-        hi = (
-            _envelope_bound(his, t, utc, max)
-            if all(x is not None for x in his)
-            else None
-        )
-        if lo is None and hi is None:
-            continue
-        ranges.setdefault(c, (lo, hi))
-    # LIKE-prefix claims only make sense against STRING stats (a
-    # prefix pattern on any other type is a cast in disguise)
-    like_prefixes = {
-        c: p
-        for c, p in like_prefixes.items()
-        if dtypes.get(c.lower()) == "string"
-    }
-    for c, (clo, chi) in list(ranges.items()):
-        if isinstance(clo, _TemporalLit) or isinstance(chi, _TemporalLit):
-            # ANSI typed literals (round 13): claims only on a column
-            # whose own type admits the literal's kind, via the same
-            # faithful-parse + UTC gates as the string spelling
-            t = dtypes.get(c.lower())
-            lo2 = _ansi_bound(clo, t, utc)
-            hi2 = _ansi_bound(chi, t, utc)
-            if (clo is not None and lo2 is None) or (
-                chi is not None and hi2 is None
-            ):
-                del ranges[c]
-            else:
-                ranges[c] = (lo2, hi2)
-            continue
-        if not (isinstance(clo, str) or isinstance(chi, str)):
-            continue
-        t = dtypes.get(c.lower())
-        if t == "date" or (t in ("timestamp", "timestamp_ntz")):
-            lo2 = _sql_temporal(clo, t) if clo is not None else None
-            hi2 = _sql_temporal(chi, t) if chi is not None else None
-            if (
-                (clo is not None and lo2 is None)
-                or (chi is not None and hi2 is None)
-                or (t != "date" and not utc)
-                or t == "timestamp_ntz"
-            ):
-                # no faithful typed parse (or instant semantics this
-                # layer cannot certify): the conjunct makes NO pruning
-                # claims — the statement's own WHERE still applies
-                del ranges[c]
-            else:
-                ranges[c] = (lo2, hi2)
-        # str bound on a string column: stats are like-typed strings,
-        # lexical compare is exact.  str bound on a numeric column:
-        # stats are numeric, the cross-type guard in
-        # `read_snapshot_pruned` makes no claims.  Both keep.
-    if not (ranges or point_eq or partition_eq or in_lists or like_prefixes):
-        return None
-    try:
-        df = sn.read_snapshot_pruned(
-            spark,
-            root,
-            ranges=ranges or None,
-            partition_eq=partition_eq or None,
-            point_eq=point_eq or None,
-            point_in=in_lists or None,
-            prefixes=like_prefixes or None,
-            version=version,
-        )
-        df.schema  # force analysis NOW: an unanalyzable pruned view
-        # must fall back to the plain attach, not fail the statement
-    except Exception:
-        return None  # anything unexpected: the plain attach stands
-    df.createOrReplaceTempView(name)
-    return prior
-
-
-#: literal forms BOTH Spark's string→timestamp cast and Python's
-#: fromisoformat parse to the SAME instant: padded date, optional
-#: ' '/'T' time to minute/second/fraction precision, optional offset.
-#: Python 3.11 fromisoformat is LOOSER than Spark ('2024-W02-1',
-#: '20240110' parse here but cast to NULL there) — the intersection
-#: gate keeps the metadata COUNT path from folding against a bound
-#: real execution nulls out (review, round 12).
 def _topk_attach(
     spark: SparkSession,
     catalog_dir: str,
@@ -4190,8 +3581,8 @@ def _topk_attach(
     never output.  Taken files must carry trusted stats: NaN-free
     under the round-12 evidence rule (a NaN row is greatest and
     invisible to finite stats — untrusted files contribute zero to
-    the accumulation but stay in the read set through the pruner's
-    own NaN-soundness), typed temporal conversion for DATE/TIMESTAMP
+    the accumulation but stay in the read set through
+    `read_snapshot_pruned`'s own NaN-soundness), typed temporal conversion for DATE/TIMESTAMP
     (UTC session required for TIMESTAMP).
 
     NULL ordering: Spark's default is NULLS LAST for DESC — proven
@@ -4487,13 +3878,21 @@ def _topk_attach(
             partition_eq=partition_eq or None,
             version=version,
         )
-        df.schema  # force analysis NOW (see _prune_one)
+        df.schema  # force analysis NOW: an unanalyzable pruned view
+        # must fall back to the plain attach
     except Exception:
         return None  # anything unexpected: the plain attach stands
     df.createOrReplaceTempView(name)
     return {name: prior}
 
 
+#: literal forms BOTH Spark's string→timestamp cast and Python's
+#: fromisoformat parse to the SAME instant: padded date, optional
+#: ' '/'T' time to minute/second/fraction precision, optional offset.
+#: Python 3.11 fromisoformat is LOOSER than Spark ('2024-W02-1',
+#: '20240110' parse here but cast to NULL there) — the intersection
+#: gate keeps the metadata COUNT path from folding against a bound
+#: real execution nulls out (review, round 12).
 _SQL_TS_FORMS = re.compile(
     r"\d{4}-\d{2}-\d{2}"
     r"([ T]\d{2}:\d{2}(:\d{2}(\.\d{1,6})?)?"
@@ -4505,8 +3904,7 @@ def _sql_temporal(v, t: str):
     """Parse a SQL string literal into the typed bound for a date or
     timestamp column — accepting only forms where Spark's string-cast
     semantics and Python's parse provably AGREE (`_SQL_TS_FORMS`) —
-    or ``None`` when no faithful parse exists.  For the pruner a
-    dropped conjunct just claims nothing; for the metadata range
+    or ``None`` when no faithful parse exists.  For the metadata range
     COUNT the bound is ANSWER-BEARING, so the format gate is a
     correctness condition, not a nicety."""
     import datetime as _dt

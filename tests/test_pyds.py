@@ -144,3 +144,38 @@ def test_jsonl_manifest_writer_roundtrip(spark, tmp_path):
     back = read_jsonl_manifest(spark, path, df.schema)
     assert back.count() == 100
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_register_once_follows_last_class_per_name(spark):
+    """Spark keeps whichever class registered LAST under a source name,
+    so the per-session memo must let A -> B -> A reach Spark every time
+    (a memo keyed by class alone skipped the second A and left B)."""
+    from pyspark.sql.datasource import DataSource, DataSourceReader
+
+    from data_engineering_challenge_spark.sources.pyds import _register_once
+
+    def source(tag: str):
+        class Reader(DataSourceReader):
+            def read(self, partition):
+                yield (tag,)
+
+        class Source(DataSource):
+            @classmethod
+            def name(cls) -> str:
+                return "register_once_swap"
+
+            def schema(self) -> str:
+                return "tag string"
+
+            def reader(self, schema):
+                return Reader()
+
+        return Source
+
+    a, b = source("a"), source("b")
+    seen = []
+    for cls in (a, b, a):
+        _register_once(spark, cls)
+        df = spark.read.format("register_once_swap").load()
+        seen.append(df.first()["tag"])
+    assert seen == ["a", "b", "a"]
