@@ -42,6 +42,8 @@ class AttributionPipeline:
     def __init__(self, spark: SparkSession, config: PipelineConfig | None = None):
         self.spark = spark
         self.config = config or PipelineConfig()
+        #: whether the last build_journeys / attribute produced no rows
+        self._step_empty = False
 
     # -- inputs ------------------------------------------------------------
 
@@ -101,6 +103,7 @@ class AttributionPipeline:
         )
         if journeys.isEmpty():  # empty guard, pipeline.py:91-93
             log.warning("no journeys built — aborting step")
+            self._step_empty = True
             return journeys
         if self.config.validate_outputs:
             from .operators import quality as qa
@@ -135,6 +138,7 @@ class AttributionPipeline:
             ).drop("conv_ts", "conv_date")
             io.write_csv(csv, self.config.journeys_path.replace(".parquet", ".csv"),
                          single_file=True)
+        self._step_empty = False
         return journeys
 
     # -- step 2: attribute (reference api_client.py:153-252) ---------------
@@ -145,6 +149,7 @@ class AttributionPipeline:
             journeys = self.spark.read.parquet(cfg.journeys_path)
         if journeys.isEmpty():  # zero-records guard, pipeline.py:98-100
             log.warning("no journeys to attribute")
+            self._step_empty = True
             return journeys
 
         if cfg.model == "external":
@@ -171,13 +176,18 @@ class AttributionPipeline:
         # atomic overwrite — replaces the reference's per-chunk delete+insert
         io.write_parquet(attributed, self._out("attribution_customer_journey"))
 
-        # post-write verification (api_client.py:254-268)
+        # post-write verification (api_client.py:254-268); the same job
+        # counts the attributed conversions
         check = attr.verify_attribution(
             self.spark.read.parquet(self._out("attribution_customer_journey"))
         )
-        bad = check.filter(F.col("is_valid") == 0).count()
+        n, bad = check.agg(
+            F.count(F.lit(1)),
+            F.count(F.when(F.col("is_valid") == 0, 1)),
+        ).first()
         if bad:
             log.warning("%d conversions with non-unit ihc sums", bad)
+        self._step_empty = n == 0
         return attributed
 
     # -- step 3: report (reference channel_reporter.py:153-173) ------------
@@ -235,13 +245,16 @@ class AttributionPipeline:
     def run(
         self, start_date: str | None = None, end_date: str | None = None
     ) -> DataFrame | None:
-        journeys = self.build_journeys(start_date, end_date)
-        if journeys.isEmpty():
+        # each step records whether it produced rows (`_step_empty`, from
+        # jobs it runs anyway): re-testing the lazy plans would run the
+        # as-of join and the attribution again
+        self.build_journeys(start_date, end_date)
+        if self._step_empty:
             return None
         # step 2 reads the parquet step 1 just wrote (NOT the lazy journeys
         # plan): the materialized relation is the reuse boundary — the as-of
         # join runs once, and step 2's shuffles start from columnar parquet
-        attributed = self.attribute(None)
-        if attributed.isEmpty():
+        self.attribute(None)
+        if self._step_empty:
             return None
         return self.report(start_date, end_date)

@@ -1289,7 +1289,10 @@ def q_sql_metadata_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``SELECT day_part, SUM(qty) … GROUP BY day_part``, the same under
     a partition predicate, and the whole-table form all answer from
     the manifest with ZERO data reads at any scale — pinned in
-    tests/test_sql_exec.py by renaming every data file away.  Exact by
+    tests/test_sql_exec.py by renaming every data file away.  The
+    executor recognizes these shapes on Catalyst's optimized plan
+    (`sql_exec._metadata_answer`: one Aggregate over a full table scan,
+    the WHERE translated exactly into claims).  Exact by
     construction: integral sums fold associatively in arbitrary
     precision (float SUM refuses — Spark's own double SUM is
     order-dependent); a fold Spark's long/double accumulators would
@@ -1612,8 +1615,10 @@ def q_sql_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     order until k is reached; T0 = the min recorded min(col) over the
     taken files — and re-registers the view as the pruned scan with
     ``col >= T0`` composed onto the statement's own claims
-    (`sql_exec._topk_attach`).  At least k rows provably lie at or
-    above T0, so no sub-threshold file can contribute to the LIMIT:
+    (`sql_exec._topk_attach`, which recognizes ``GlobalLimit / Sort``
+    over the table's scan in Catalyst's optimized plan and translates
+    the scan's filter exactly into claims).  At least k rows provably
+    lie at or above T0, so no sub-threshold file can contribute to the LIMIT:
     on a clustered 100 TB table this reads one or two files where
     Spark's own sort+limit reads the table (its row-group pushdown
     has no ORDER-BY awareness).  ASC handles NULLS-FIRST defaults by
@@ -1983,14 +1988,12 @@ def q_sql_partition_transform_pruned(
     """FUNCTION partition transforms prune from SQL text (round 11):
     the table is hidden-partitioned by ``DAY(ts)`` — an Iceberg-style
     transform declared in SQL DDL — and the statement's
-    ``WHERE DAY(ts) = 15`` matches the transform token-wise, skipping
-    every other day's files by recorded partition values alone.
-    Previously any parenthesized WHERE kept the plain attach, so
-    realistic transforms (`day(...)`, `month(...)`, `a % n`) could
-    never prune from SQL; the splitter now tracks depth, and a
-    partition equality is accepted only when the literal's type
-    matches the transform's OUTPUT type (Spark coerces
-    ``day_part = '15'``; a recorded-string compare must not).  The
+    ``WHERE DAY(ts) = 15`` matches the transform structurally in
+    Catalyst's optimized plan (the filter over the scan against the
+    transform analyzed over the table), skipping every other day's
+    files by recorded partition values alone.  Literals arrive typed
+    by the analyzer, so ``day_part = '15'`` claims the integer 15
+    exactly as Spark compares it.  The
     hidden-partition contract is Iceberg's: the user writes the
     NATURAL predicate, never a partition column.  Build cached per
     (query, sf_dir); partition-skip evidence in
@@ -2226,9 +2229,10 @@ def q_sql_metadata_partition_count(
     row of a partitioned file shares its recorded transform value, so
     with no residual conjunct the sum over matching files IS the
     count, ZERO data-file reads at any scale (pinned in
-    tests/test_sql_exec.py by renaming every data file away).  Any
-    shape the metadata cannot answer exactly — a residual conjunct, a
-    type-mismatched literal, MoR deletes, mixed lineage — silently
+    tests/test_sql_exec.py by renaming every data file away).  The
+    shape is read off Catalyst's optimized plan
+    (`sql_exec._metadata_answer`); any statement the metadata cannot
+    answer exactly — a residual conjunct, MoR deletes, mixed lineage —
     falls back to the (file-pruned) scan.  The reference COUNTs by
     scanning SQLite; on 100 TB this path answers without opening a
     file.  Build shared with `sql_show_partitions`
@@ -2280,8 +2284,10 @@ def q_sql_partition_group_count(
     per-value sum IS each group's count, ZERO data reads at any scale
     (schema-identical to real execution: the key column reuses the
     analyzed expression's own type/nullability).  MoR deletes, mixed
-    lineage, residual clauses, and non-transform groupings fall back
-    to the real aggregation.  The reference GROUPs by scanning SQLite
+    lineage, residual conjuncts, and non-transform groupings fall back
+    to the real aggregation; HAVING / ORDER BY / LIMIT above the
+    Aggregate run in Spark over the folded rows
+    (`sql_exec._metadata_answer`).  The reference GROUPs by scanning SQLite
     (pipeline/queries.py); at 100 TB this is a dashboard's
     rows-per-day panel answered without opening a file.  Build shared
     with `sql_metadata_partition_count` (`_dpe_catalog`)."""
@@ -2421,9 +2427,12 @@ def q_sql_metadata_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer stats hide nothing, a NaN-carrying or count-less file
     refuses and the real scan runs (parquet writers EXCLUDE NaN from
     min/max, so finite stats alone cannot match Spark's
-    NaN-is-greatest ordering).  String/temporal stats are ISO strings
-    of a different type and refuse.  MoR deletes, missing stats,
-    WHERE clauses all fall back to the real aggregation.  Zero-read
+    NaN-is-greatest ordering).  DATE and (UTC session) TIMESTAMP
+    stats convert to typed values; string stats refuse.  MoR deletes
+    and missing stats fall back to the real aggregation; a WHERE
+    routes to the partition or range folds of the same decider
+    (`sql_exec._metadata_answer`, read off Catalyst's optimized
+    plan).  Zero-read
     pin in tests/test_sql_exec.py (files renamed away).  Build cached
     per (query, sf_dir)."""
     import tempfile

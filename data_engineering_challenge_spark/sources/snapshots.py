@@ -5414,6 +5414,27 @@ def _project_delete_keys(df, d: dict, key_tuple, keep=()):
     )
 
 
+def _local_rows(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """Driver-side rows as a LOCAL RELATION, built through an Arrow
+    table: a tuple list — and a pandas frame when
+    ``spark.sql.execution.arrow.pyspark.enabled`` is off, its default —
+    plans a Python-RDD LogicalRDD instead, whose every execution runs
+    a Python-worker job (~1.2 s a collect measured, against ~0.04 s).
+    ``schema`` is a StructType or a DDL string; None stays NULL and
+    NaN stays NaN."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def read_snapshot_mor(
     spark: SparkSession,
     root: str,
@@ -5488,7 +5509,8 @@ def read_snapshot_mor(
             "/", *[F.element_at(parts, k) for k in range(-depth, 0)]
         )
 
-    seq_map = spark.createDataFrame(
+    seq_map = _local_rows(
+        spark,
         [(base[f], int(fseq.get(f, 0))) for f in scan_files],
         f"`{rel_c}` STRING, `{seq_c}` BIGINT",
     )
@@ -8158,22 +8180,7 @@ def snapshot_stats_agg(
         vals.extend([lo, hi])
         ty = _sql_type(lo)
         fields.extend([f"min_{c} {ty}", f"max_{c} {ty}"])
-    if not any(isinstance(v, float) and v != v for v in vals):
-        # pandas/Arrow path → LocalRelation: collect is a driver-side
-        # copy instead of a scheduled RDD job (~0.04 s vs ~1.2 s
-        # measured, round 12); object dtype keeps None as NULL.  A
-        # NaN extreme would convert to NULL there — exact path then;
-        # same fallback on any Arrow conversion surprise.
-        try:
-            import pandas as pd
-
-            return spark.createDataFrame(
-                pd.DataFrame([list(vals)], dtype=object),
-                ", ".join(fields),
-            )
-        except Exception:
-            pass
-    return spark.createDataFrame([tuple(vals)], ", ".join(fields))
+    return _local_rows(spark, [tuple(vals)], ", ".join(fields))
 
 
 def _fold_sum(cur: tuple, sv) -> tuple:
@@ -8584,6 +8591,13 @@ def snapshot_partition_count(
     return total
 
 
+def _partition_strs(pv) -> list[str]:
+    """A partition claim's value (or list of values) as the strings the
+    manifest records."""
+    vals = pv if isinstance(pv, (list, tuple, set, frozenset)) else [pv]
+    return sorted(str(x) for x in vals)
+
+
 def _classify_range_file(
     bounds: dict,
     partition_eq: dict | None,
@@ -8613,7 +8627,7 @@ def _classify_range_file(
         if rec == "__ABSENT__":
             interior = False  # mixed lineage: the boundary scan
             # re-applies the semantic transform predicate
-        elif rec != str(pv):
+        elif rec not in _partition_strs(pv):
             return "excluded", []  # every row shares the file's value
     null_cols: list[int] = []
     for c, (lo, lo_s, hi, hi_s) in (bounds or {}).items():
@@ -8649,12 +8663,9 @@ def _typed_stat(v, bound):
     unparseable string) — the caller then treats the file as boundary,
     never folds it.
 
-    Deliberately NOT `sql_exec._sql_temporal`: that parses USER
-    LITERALS and gates on the intersection of Spark-cast and Python
-    formats (a literal Spark nulls out must not become a bound); this
-    parses `_stat_primitive`'s OWN isoformat output, where every
-    produced form is faithful by construction and a format gate would
-    only demote valid files to boundary."""
+    Bounds come typed from Catalyst's plan (the SQL layer never
+    parses literal text); this parses `_stat_primitive`'s OWN isoformat
+    output, where every produced form is faithful by construction."""
     import datetime as dt
 
     if isinstance(v, bool):
@@ -8811,11 +8822,11 @@ def snapshot_range_agg_values(
     the scan re-applies the semantic transform predicate."""
     from pyspark.sql import functions as F
 
-    if not bounds or any(
+    if not (bounds or partition_eq) or any(
         b[0] is None and b[2] is None for b in bounds.values()
     ):
         raise ValueError(
-            "snapshot_range_agg: every bound needs at least one side"
+            "snapshot_range_agg: needs a claim, and every bound a side"
         )
     v = current_version(root) if version is None else version
     if v is None:
@@ -8976,7 +8987,9 @@ def snapshot_range_agg_values(
             # the SEMANTIC transform predicate, exactly as
             # read_snapshot_pruned re-applies it — boundary files
             # without a recorded value still answer correctly
-            term = F.expr(transforms[pn]).cast("string") == str(pv)
+            term = F.expr(transforms[pn]).cast("string").isin(
+                _partition_strs(pv)
+            )
             pred = term if pred is None else pred & term
         aggs = [F.count(F.lit(1)).alias("__n")]
         for i, c in enumerate(cols):
@@ -9227,7 +9240,9 @@ def snapshot_group_range_agg(
                 )
                 pred = term if pred is None else pred & term
         for n, pv in (partition_eq or {}).items():
-            term = F.expr(transforms[n]).cast("string") == str(pv)
+            term = F.expr(transforms[n]).cast("string").isin(
+                _partition_strs(pv)
+            )
             pred = term if pred is None else pred & term
         aggs = [F.count(F.lit(1)).alias("__n")]
         for i, c in enumerate(cols):

@@ -186,3 +186,30 @@ def test_auto_salt_run_parity(spark, star_dir, tmp_path):
 
     assert salted_j.count() == plain_j.count()
     assert salted_j.exceptAll(plain_j).count() == 0
+
+
+def test_run_adds_no_jobs_to_its_steps(spark, star_dir, tmp_path):
+    """run() decides emptiness from what its steps already computed: it
+    runs exactly the Spark jobs of build_journeys + attribute(None) +
+    report, never re-executing the journeys or attribution plans to
+    test them for rows."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    pipe = AttributionPipeline(spark, _cfg(star_dir, tmp_path / "steps"))
+    steps = (
+        jobs("steps_build", pipe.build_journeys)
+        + jobs("steps_attr", lambda: pipe.attribute(None))
+        + jobs("steps_report", pipe.report)
+    )
+    run_pipe = AttributionPipeline(spark, _cfg(star_dir, tmp_path / "run"))
+    assert jobs("whole_run", run_pipe.run) == steps

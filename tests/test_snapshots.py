@@ -1255,6 +1255,10 @@ def test_mor_read_plan_shape(spark, tmp_path):
     ):
         sn.snapshot_mor_merge(spark, root, spark.createDataFrame(b), ["k"])
     df = sn.read_snapshot_mor(spark, root)
+    # the file→sequence map is a driver-side LocalRelation, not a
+    # Python RDD: no Python-worker job runs per execution of the read
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" not in analyzed and "LocalRelation" in analyzed
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan

@@ -1431,15 +1431,15 @@ def test_metadata_sum_statements(spark, cdir):
     s = "SELECT SUM(v) AS s FROM ms"
     assert _rows(execute_sql(spark, s, cdir)) == _rows(spark.sql(s))
     from data_engineering_challenge_spark.sql_exec import (
-        _metadata_agg, _attach,
+        _metadata_answer, _attach,
     )
 
     entries = _attach(spark, cdir, s)
-    assert _metadata_agg(spark, cdir, s, entries) is None  # refused
+    assert _metadata_answer(spark, cdir, s, entries) is None  # refused
     sn.snapshot_compact(spark, root)
     cat.attach_catalog(spark, cdir, names=["ms"])
     entries = _attach(spark, cdir, s)
-    assert _metadata_agg(spark, cdir, s, entries) is not None
+    assert _metadata_answer(spark, cdir, s, entries) is not None
     assert _rows(execute_sql(spark, s, cdir)) == _rows(spark.sql(s))
     # schema-EVOLUTION refusal: renamed logical names no longer bind
     # the recorded physical sums — the evolved read answers
@@ -1447,7 +1447,7 @@ def test_metadata_sum_statements(spark, cdir):
     s = "SELECT SUM(w) AS s FROM ms"
     assert _rows(execute_sql(spark, s, cdir)) == _rows(spark.sql(s))
     entries = _attach(spark, cdir, s)
-    assert _metadata_agg(spark, cdir, s, entries) is None
+    assert _metadata_answer(spark, cdir, s, entries) is None
 
 
 def test_metadata_decimal_sum_statements(spark, cdir):
@@ -1517,11 +1517,11 @@ def test_metadata_decimal_sum_statements(spark, cdir):
     got, exp = execute_sql(spark, s, cdir), spark.sql(s)
     assert got.schema == exp.schema and _rows(got) == _rows(exp)
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_agg, _metadata_range_count, _sums_ok,
+        _attach, _metadata_answer,
     )
 
     entries = _attach(spark, cdir, s)
-    assert _metadata_range_count(spark, cdir, s, entries) is not None
+    assert _metadata_answer(spark, cdir, s, entries) is not None
     # AVG rounding is HALF_UP away from zero (Spark's decimal
     # average), not banker's: avg of 0.01 over 32 rows at scale 6
     execute_sql_script(
@@ -1545,7 +1545,7 @@ def test_metadata_decimal_sum_statements(spark, cdir):
     s = "SELECT AVG(v) AS a, SUM(v) AS s FROM half"
     got, exp = execute_sql(spark, s, cdir), spark.sql(s)
     entries = _attach(spark, cdir, s)
-    assert _metadata_agg(spark, cdir, s, entries) is not None
+    assert _metadata_answer(spark, cdir, s, entries) is not None
     assert got.schema == exp.schema and _rows(got) == _rows(exp)
     assert got.first()["a"] == decimal.Decimal("0.000000")
     # the AVG reproduction is Spark's own TWO-STAGE rounding (the JVM
@@ -1565,35 +1565,37 @@ def test_metadata_decimal_sum_statements(spark, cdir):
     s = "SELECT AVG(v) AS a, SUM(v) AS s2 FROM wavg"
     got, exp = execute_sql(spark, s, cdir), spark.sql(s)
     entries = _attach(spark, cdir, s)
-    assert _metadata_agg(spark, cdir, s, entries) is not None
+    assert _metadata_answer(spark, cdir, s, entries) is not None
     assert got.schema == exp.schema and _rows(got) == _rows(exp)
     # AVG on p+4 > 38 refuses to the scan; SUM still answers
     s = "SELECT AVG(wide) AS a FROM money"
     entries = _attach(spark, cdir, s)
-    assert _metadata_agg(spark, cdir, s, entries) is None
+    assert _metadata_answer(spark, cdir, s, entries) is None
     assert _rows(execute_sql(spark, s, cdir)) == _rows(spark.sql(s))
     # the precision-overflow gate mirrors the int64-wrap rule: an
     # exact fold wider than decimal(min(38,p+10),s) refuses
     from pyspark.sql import types as T
 
-    items = [("sum", "amount", None)]
-    resolved = {
-        "amount": T.StructField("amount", T.DecimalType(12, 2), True)
-    }
-    assert _sums_ok(items, resolved, {"amount": (10**22 - 1, 5)})
-    assert not _sums_ok(items, resolved, {"amount": (10**22, 5)})
-    assert not _sums_ok(items, resolved, {"amount": (-(10**22), 5)})
+    from data_engineering_challenge_spark.sql_exec import (
+        _Refused, _sum_value,
+    )
+
+    dt = T.DecimalType(12, 2)
+    assert _sum_value("sum", 10**22 - 1, 5, dt, False) is not None
+    for s in (10**22, -(10**22)):
+        with pytest.raises(_Refused):
+            _sum_value("sum", s, 5, dt, False)
     # MoR refusal: after DELETE the fold would be stale — scan answers
     execute_sql(spark, "DELETE FROM money WHERE k = 7", cdir)
     s = "SELECT SUM(amount) AS s FROM money"
     entries = _attach(spark, cdir, s)
-    assert _metadata_agg(spark, cdir, s, entries) is None
+    assert _metadata_answer(spark, cdir, s, entries) is None
     assert _rows(execute_sql(spark, s, cdir)) == _rows(spark.sql(s))
     # compaction re-records decimal sums and restores the fast path
     sn.snapshot_compact(spark, root)
     cat.attach_catalog(spark, cdir, names=["money"])
     entries = _attach(spark, cdir, s)
-    assert _metadata_agg(spark, cdir, s, entries) is not None
+    assert _metadata_answer(spark, cdir, s, entries) is not None
     assert _rows(execute_sql(spark, s, cdir)) == _rows(spark.sql(s))
 
 
@@ -2322,7 +2324,7 @@ def test_metadata_min_max_agg(spark, cdir):
     assert out.collect() == ref.collect()
     # zero-read pin: files renamed away, the white-box path answers
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_agg,
+        _attach, _metadata_answer,
     )
 
     entries = _attach(spark, cdir, stmt)
@@ -2332,24 +2334,24 @@ def test_metadata_min_max_agg(spark, cdir):
     try:
         for p in paths:
             os.rename(p, p + ".hidden")
-        got = _metadata_agg(spark, cdir, stmt, entries)
+        got = _metadata_answer(spark, cdir, stmt, entries)
         assert got is not None
         assert [tuple(r) for r in got.collect()] == [(0, 999, 1000, 999)]
         # a STRING column's stats are ISO/lexical — a different type
         # than Spark returns, so the shape refuses
-        assert _metadata_agg(
+        assert _metadata_answer(
             spark, cdir, "SELECT MIN(s) FROM ma", entries
         ) is None
         # FLOAT/DOUBLE answer since round 12: the write chokepoint
         # recorded a zero NaN count per file, so the finite footer
         # stats provably hide nothing — still zero data reads (the
         # files are renamed away here)
-        got_v = _metadata_agg(
+        got_v = _metadata_answer(
             spark, cdir, "SELECT MAX(v) AS hv FROM ma", entries
         )
         assert got_v is not None and got_v.first()["hv"] == 499.5
         # a WHERE is not this shape
-        assert _metadata_agg(
+        assert _metadata_answer(
             spark, cdir, "SELECT MIN(k) FROM ma WHERE k > 5", entries
         ) is None
     finally:
@@ -2427,8 +2429,9 @@ def test_metadata_partition_count(spark, cdir):
     """``SELECT COUNT(*) FROM t WHERE <partition equalities>`` answers
     from the MANIFEST with zero data reads (round 11 — Iceberg's
     partition-count path), pinned by chmod-ing every data file
-    unreadable; any residual conjunct, type mismatch, or MoR delete
-    falls back to the normal (at worst file-pruned) execution."""
+    unreadable; a literal the analyzer casts to the transform's type
+    answers like the typed one, and any residual conjunct or MoR
+    delete falls back to the normal (at worst file-pruned) execution."""
     import os
 
     execute_sql_script(
@@ -2463,7 +2466,7 @@ def test_metadata_partition_count(spark, cdir):
     # chmod), the metadata path still answers; shapes it must refuse
     # return None instead of a wrong number
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_count,
+        _attach, _metadata_answer,
     )
 
     entries = _attach(spark, cdir, "SELECT COUNT(*) FROM mc WHERE DAY(ts) = 15")
@@ -2473,7 +2476,7 @@ def test_metadata_partition_count(spark, cdir):
     try:
         for p in paths:
             os.rename(p, p + ".hidden")
-        out = _metadata_count(
+        out = _metadata_answer(
             spark, cdir,
             "SELECT COUNT(*) AS n FROM mc WHERE DAY(ts) = 15", entries,
         )
@@ -2481,34 +2484,38 @@ def test_metadata_partition_count(spark, cdir):
         # no WHERE at all: the whole-table count answers from the
         # summed per-file row counts — including the BARE 7-token
         # form (review, round 11: the shape guard rejected it)
-        out = _metadata_count(
+        out = _metadata_answer(
             spark, cdir, "SELECT COUNT(*) AS n FROM mc", entries
         )
         assert out is not None and out.first()["n"] == 5000
-        out = _metadata_count(
+        out = _metadata_answer(
             spark, cdir, "SELECT COUNT(*) FROM mc", entries
         )
         assert out is not None and out.first()[0] == 5000
         # a GROUP BY is one row per group — never the metadata shape
-        assert _metadata_count(
+        assert _metadata_answer(
             spark, cdir, "SELECT COUNT(*) AS n FROM mc GROUP BY v", entries
         ) is None
-        # a dangling AS is a syntax error Spark must raise — the fast
-        # path must not mask it with a successful count
-        assert _metadata_count(
+        # Spark 4.1 reads a trailing `AS` as the table alias: the
+        # statement analyzes, so the answer is the count Spark returns
+        spark.sql("SELECT COUNT(*) FROM mc AS")
+        out = _metadata_answer(
             spark, cdir, "SELECT COUNT(*) FROM mc AS", entries
-        ) is None
+        )
+        assert out is not None and out.first()[0] == 5000
         # residual conjunct: metadata cannot answer exactly
-        assert _metadata_count(
+        assert _metadata_answer(
             spark, cdir,
             "SELECT COUNT(*) AS n FROM mc WHERE DAY(ts) = 15 AND v >= 0",
             entries,
         ) is None
-        # type-mismatched literal ('15' on an int transform output)
-        assert _metadata_count(
+        # a string literal on the int transform output: the analyzer
+        # casts '15' to 15, exactly as Spark compares — same count
+        out = _metadata_answer(
             spark, cdir,
             "SELECT COUNT(*) AS n FROM mc WHERE DAY(ts) = '15'", entries,
-        ) is None
+        )
+        assert out is not None and out.first()["n"] == want
     finally:
         for p in paths:
             if os.path.exists(p + ".hidden"):
@@ -2604,7 +2611,7 @@ def test_metadata_agg_ambiguous_case_insensitive_falls_back(
     must fall back (None), never answer from the first schema match
     (advice, round 12)."""
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_agg,
+        _attach, _metadata_answer,
     )
 
     prior = spark.conf.get("spark.sql.caseSensitive")
@@ -2616,10 +2623,10 @@ def test_metadata_agg_ambiguous_case_insensitive_falls_back(
         cat.catalog_register(cdir, "amb_t", root)
         entries = _attach(spark, cdir, "SELECT MAX(k) FROM amb_t")
         # case-SENSITIVE session: exact matches resolve per spelling
-        lo = _metadata_agg(
+        lo = _metadata_answer(
             spark, cdir, "SELECT MAX(k) AS m FROM amb_t", entries
         )
-        hi = _metadata_agg(
+        hi = _metadata_answer(
             spark, cdir, "SELECT MAX(K) AS m FROM amb_t", entries
         )
         assert lo is not None and lo.first()["m"] == 9
@@ -2627,7 +2634,7 @@ def test_metadata_agg_ambiguous_case_insensitive_falls_back(
         # case-INSENSITIVE session: both fields match — real execution
         # rejects the statement, so the fast path must not answer it
         spark.conf.set("spark.sql.caseSensitive", "false")
-        assert _metadata_agg(
+        assert _metadata_answer(
             spark, cdir, "SELECT MAX(k) AS m FROM amb_t", entries
         ) is None
     finally:
@@ -2657,7 +2664,7 @@ def test_where_body_explicit_clause_stops(spark, cdir):
     )
     assert n_files >= 8
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_count, _pruned_attach,
+        _attach, _metadata_answer, _pruned_attach,
     )
 
     stmt = "SELECT k FROM ws WHERE k BETWEEN 100 AND 110 SORT BY k"
@@ -2670,7 +2677,7 @@ def test_where_body_explicit_clause_stops(spark, cdir):
         cat.attach_catalog(spark, cdir, names=pruned)
     assert pruned and n <= 2, (pruned, n)
     # a trailing OFFSET truncates — never the single-row COUNT shape
-    assert _metadata_count(
+    assert _metadata_answer(
         spark, cdir, "SELECT COUNT(*) AS n FROM ws WHERE k = 5 OFFSET 1",
         entries,
     ) is None
@@ -2922,7 +2929,7 @@ def test_metadata_float_agg_nan_refusals(spark, cdir, tmp_path):
     import pytest
 
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_agg,
+        _attach, _metadata_answer,
     )
 
     root = str(tmp_path / "nanful")
@@ -2935,14 +2942,14 @@ def test_metadata_float_agg_nan_refusals(spark, cdir, tmp_path):
     stmt = "SELECT MAX(v) AS hv FROM nanful"
     entries = _attach(spark, cdir, stmt)
     # the recorded count marks the NaN: the fast path refuses ...
-    assert _metadata_agg(spark, cdir, stmt, entries) is None
+    assert _metadata_answer(spark, cdir, stmt, entries) is None
     with pytest.raises(ValueError, match="NaN"):
         sn._stats_agg_values(root, ["v"])
     # ... and real execution returns Spark's NaN-is-greatest answer
     hv = execute_sql(spark, stmt, cdir).first()["hv"]
     assert hv != hv  # NaN
     # MAX over the NaN-free column still answers from stats
-    got = _metadata_agg(spark, cdir, "SELECT MAX(k) AS hk FROM nanful",
+    got = _metadata_answer(spark, cdir, "SELECT MAX(k) AS hk FROM nanful",
                         entries)
     assert got is not None and got.first()["hk"] == 9
 
@@ -2956,7 +2963,7 @@ def test_metadata_float_agg_nan_refusals(spark, cdir, tmp_path):
     cat.catalog_register(cdir, "cleanf", root2)
     stmt2 = "SELECT MIN(v) AS lv, MAX(v) AS hv FROM cleanf"
     entries2 = _attach(spark, cdir, stmt2)
-    got2 = _metadata_agg(spark, cdir, stmt2, entries2)
+    got2 = _metadata_answer(spark, cdir, stmt2, entries2)
     assert got2 is not None
     assert tuple(got2.first()) == (0.0, 2.25)
     # ... until its NaN counts are STRIPPED (a pre-round-12 manifest):
@@ -2972,7 +2979,7 @@ def test_metadata_float_agg_nan_refusals(spark, cdir, tmp_path):
         json.dump(e, open(epath, "w"))
     sn._JSON_CACHE.clear()
     sn._RESOLVED_CACHE.clear()
-    assert _metadata_agg(spark, cdir, stmt2, entries2) is None
+    assert _metadata_answer(spark, cdir, stmt2, entries2) is None
     with pytest.raises(ValueError, match="NaN count"):
         sn._stats_agg_values(root2, ["v"])
 
@@ -2988,7 +2995,7 @@ def test_metadata_range_count_interior_fold(spark, cdir):
     import os
 
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_range_count,
+        _attach, _metadata_answer,
     )
 
     execute_sql_script(
@@ -3027,19 +3034,19 @@ def test_metadata_range_count_interior_fold(spark, cdir):
     try:
         for p in hidden:
             os.rename(p, p + ".hidden")
-        got = _metadata_range_count(spark, cdir, stmt, entries)
+        got = _metadata_answer(spark, cdir, stmt, entries)
         assert got is not None and got.first()["n"] == 3000
         # a timestamp window spanning whole files folds the same way
         stmt2 = (
             "SELECT COUNT(*) AS n FROM rct "
             "WHERE ts >= '2024-01-01 16:40:00'"  # minute 1000
         )
-        got2 = _metadata_range_count(spark, cdir, stmt2, entries)
+        got2 = _metadata_answer(spark, cdir, stmt2, entries)
         assert got2 is not None and got2.first()["n"] == 3000
         # MIN/MAX under the window: extremes fold from interior
         # agg-column stats (those files are STILL renamed away); only
         # the boundary file's scan contributes the window edge
-        gotx = _metadata_range_count(
+        gotx = _metadata_answer(
             spark, cdir,
             "SELECT MIN(k) AS lo, MAX(k) AS hi, COUNT(*) AS n "
             "FROM rct WHERE k >= 1000",
@@ -3048,12 +3055,12 @@ def test_metadata_range_count_interior_fold(spark, cdir):
         assert gotx is not None
         assert tuple(gotx.first()) == (1000, 3999, 3000)
         # a float claim refuses (NaN breaks interval reasoning)
-        assert _metadata_range_count(
+        assert _metadata_answer(
             spark, cdir, "SELECT COUNT(*) AS n FROM rct WHERE v >= 0",
             entries,
         ) is None
         # a residual conjunct refuses
-        assert _metadata_range_count(
+        assert _metadata_answer(
             spark, cdir,
             "SELECT COUNT(*) AS n FROM rct WHERE k >= 0 AND v + 1 > 0",
             entries,
@@ -3082,7 +3089,7 @@ def test_metadata_range_count_interior_fold(spark, cdir):
     try:
         for p in paths3:
             os.rename(p, p + ".hidden")
-        got3 = _metadata_range_count(spark, cdir, stmt3, entries3)
+        got3 = _metadata_answer(spark, cdir, stmt3, entries3)
         assert got3 is not None and got3.first()["n"] == 900
     finally:
         for p in paths3:
@@ -3091,7 +3098,7 @@ def test_metadata_range_count_interior_fold(spark, cdir):
     # MoR deletes refuse — the real execution sees the drop
     execute_sql(spark, "DELETE FROM rcn WHERE v = 5", cdir)
     entries4 = _attach(spark, cdir, stmt3)
-    assert _metadata_range_count(spark, cdir, stmt3, entries4) is None
+    assert _metadata_answer(spark, cdir, stmt3, entries4) is None
     assert execute_sql(spark, stmt3, cdir).first()["n"] == 899
 
 
@@ -3104,7 +3111,7 @@ def test_metadata_partition_group_by(spark, cdir):
     import os
 
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_partition_group,
+        _attach, _metadata_answer,
     )
 
     execute_sql_script(
@@ -3138,13 +3145,13 @@ def test_metadata_partition_group_by(spark, cdir):
     try:
         for p in paths:
             os.rename(p, p + ".hidden")
-        got = _metadata_partition_group(spark, cdir, stmt, entries)
+        got = _metadata_answer(spark, cdir, stmt, entries)
         assert got is not None
         assert sorted(map(tuple, got.collect())) == [
             (i, 100) for i in range(1, 8)
         ]
         # unaliased spelling matches Spark's generated names
-        g2 = _metadata_partition_group(
+        g2 = _metadata_answer(
             spark, cdir,
             "SELECT DAY(ts), COUNT(*) FROM pgb GROUP BY DAY(ts)",
             entries,
@@ -3154,19 +3161,19 @@ def test_metadata_partition_group_by(spark, cdir):
         ]
         # ordinal and alias groupings accepted
         for by in ("1", "d"):
-            assert _metadata_partition_group(
+            assert _metadata_answer(
                 spark, cdir,
                 f"SELECT DAY(ts) AS d, COUNT(*) AS n FROM pgb "
                 f"GROUP BY {by}",
                 entries,
             ) is not None
         # a WHERE / a non-transform grouping refuse
-        assert _metadata_partition_group(
+        assert _metadata_answer(
             spark, cdir,
             "SELECT DAY(ts) AS d, COUNT(*) AS n FROM pgb "
             "WHERE v > 0 GROUP BY DAY(ts)", entries,
         ) is None
-        assert _metadata_partition_group(
+        assert _metadata_answer(
             spark, cdir,
             "SELECT MONTH(ts) AS mo, COUNT(*) AS n FROM pgb "
             "GROUP BY MONTH(ts)", entries,
@@ -3178,7 +3185,7 @@ def test_metadata_partition_group_by(spark, cdir):
     # MoR deletes refuse — real execution sees the drop
     execute_sql(spark, "DELETE FROM pgb WHERE v = 0", cdir)
     entries2 = _attach(spark, cdir, stmt)
-    assert _metadata_partition_group(spark, cdir, stmt, entries2) is None
+    assert _metadata_answer(spark, cdir, stmt, entries2) is None
     out2 = execute_sql(spark, stmt, cdir)
     assert sorted(map(tuple, out2.collect()))[0] == (1, 99)
 
@@ -3192,7 +3199,7 @@ def test_metadata_partition_in_and_or_counts(spark, cdir):
     import os
 
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_count,
+        _attach, _metadata_answer,
     )
 
     execute_sql_script(
@@ -3221,7 +3228,7 @@ def test_metadata_partition_in_and_or_counts(spark, cdir):
         for p in paths:
             os.rename(p, p + ".hidden")
         for stmt in (stmt_in, stmt_or):
-            got = _metadata_count(spark, cdir, stmt, entries)
+            got = _metadata_answer(spark, cdir, stmt, entries)
             assert got is not None and got.first()["n"] == 200
         # refusals: mixed transforms / non-literals / residual OR
         for stmt in (
@@ -3230,7 +3237,7 @@ def test_metadata_partition_in_and_or_counts(spark, cdir):
             "SELECT COUNT(*) AS n FROM pio WHERE DAY(ts) IN (1, v)",
             "SELECT COUNT(*) AS n FROM pio WHERE DAY(ts) = 1 OR v = 3",
         ):
-            assert _metadata_count(spark, cdir, stmt, entries) is None
+            assert _metadata_answer(spark, cdir, stmt, entries) is None
     finally:
         for p in paths:
             if os.path.exists(p + ".hidden"):
@@ -3243,11 +3250,12 @@ def test_metadata_distinct_partition_values(spark, cdir):
     row of a partitioned file shares its file's transform value, so
     the distinct recorded values ARE the distinct transform outputs —
     schema-identical to real execution; DISTINCT over a plain column
-    and DISTINCT + GROUP BY refuse."""
+    refuses, and DISTINCT over a GROUP BY of the transform is the same
+    Aggregate and answers."""
     import os
 
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_partition_group,
+        _attach, _metadata_answer,
     )
 
     execute_sql_script(
@@ -3275,17 +3283,20 @@ def test_metadata_distinct_partition_values(spark, cdir):
     try:
         for p in paths:
             os.rename(p, p + ".hidden")
-        got = _metadata_partition_group(spark, cdir, stmt, entries)
+        got = _metadata_answer(spark, cdir, stmt, entries)
         assert got is not None
         assert sorted(r["d"] for r in got.collect()) == [1, 2, 3, 4, 5]
-        assert _metadata_partition_group(
+        assert _metadata_answer(
             spark, cdir, "SELECT DISTINCT v FROM dpv", entries
         ) is None
-        assert _metadata_partition_group(
+        # DISTINCT over a GROUP BY of the transform is the same one
+        # Aggregate in the plan: answered, same values
+        got = _metadata_answer(
             spark, cdir,
-            "SELECT DISTINCT DAY(ts) FROM dpv GROUP BY DAY(ts)",
+            "SELECT DISTINCT DAY(ts) AS d FROM dpv GROUP BY DAY(ts)",
             entries,
-        ) is None
+        )
+        assert sorted(r["d"] for r in got.collect()) == [1, 2, 3, 4, 5]
     finally:
         for p in paths:
             if os.path.exists(p + ".hidden"):
@@ -3301,7 +3312,7 @@ def test_metadata_range_count_composes_partition_eq(spark, cdir):
     import os
 
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_range_count,
+        _attach, _metadata_answer,
     )
 
     execute_sql_script(
@@ -3333,7 +3344,7 @@ def test_metadata_range_count_composes_partition_eq(spark, cdir):
     try:
         for p in paths:
             os.rename(p, p + ".hidden")
-        got = _metadata_range_count(spark, cdir, stmt2, entries)
+        got = _metadata_answer(spark, cdir, stmt2, entries)
         assert got is not None and got.first()["n"] == 200
     finally:
         for p in paths:
@@ -3344,7 +3355,7 @@ def test_metadata_range_count_composes_partition_eq(spark, cdir):
 def test_pruned_attach_partition_in_and_or(spark, cdir):
     """Hidden-partition IN lists and same-transform ORs prune SELECT
     statements too (round 12 — the COUNT twin lives in
-    _metadata_count): `DAY(ts) IN (1, 3)` opens only the matching
+    _metadata_answer): `DAY(ts) IN (1, 3)` opens only the matching
     partitions' files plus unrecorded lineage, the reader re-applies
     isin(), and a mixed-transform OR keeps the plain attach."""
     execute_sql_script(
@@ -3403,7 +3414,7 @@ def test_metadata_range_sum_fold(spark, cdir):
     import os
 
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_range_count,
+        _attach, _metadata_answer,
     )
 
     execute_sql_script(
@@ -3444,7 +3455,7 @@ def test_metadata_range_sum_fold(spark, cdir):
     try:
         for p in hidden:
             os.rename(p, p + ".hidden")
-        got2 = _metadata_range_count(spark, cdir, stmt, entries)
+        got2 = _metadata_answer(spark, cdir, stmt, entries)
         assert got2 is not None
         r = got2.first()
         assert (r["s"], r["n"], r["hi"]) == (
@@ -3452,7 +3463,7 @@ def test_metadata_range_sum_fold(spark, cdir):
         )
         assert r["a"] == (3 * sum(range(1000, 4000))) / 3000
         # a float SUM refuses (order-dependent in Spark itself)
-        assert _metadata_range_count(
+        assert _metadata_answer(
             spark, cdir,
             "SELECT SUM(x) AS s FROM rsm WHERE k >= 1000", entries,
         ) is None
@@ -3479,7 +3490,7 @@ def test_metadata_range_sum_fold(spark, cdir):
     assert got3.schema == exp3.schema
     assert _rows(got3) == _rows(exp3)
     entries3 = _attach(spark, cdir, stmt3)
-    got3m = _metadata_range_count(spark, cdir, stmt3, entries3)
+    got3m = _metadata_answer(spark, cdir, stmt3, entries3)
     assert got3m is not None and _rows(got3m) == _rows(exp3)
     # int64 wrap refusal: the fold computes the exact total, sees it
     # leave long range, and hands the statement back to the scan
@@ -3494,7 +3505,7 @@ def test_metadata_range_sum_fold(spark, cdir):
     )
     stmtw = "SELECT SUM(v) AS s FROM rsw WHERE k >= 0"
     entriesw = _attach(spark, cdir, stmtw)
-    assert _metadata_range_count(spark, cdir, stmtw, entriesw) is None
+    assert _metadata_answer(spark, cdir, stmtw, entriesw) is None
 
 
 def test_metadata_partition_group_hybrid(spark, cdir):
@@ -3509,7 +3520,7 @@ def test_metadata_partition_group_hybrid(spark, cdir):
     import os
 
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_partition_group,
+        _attach, _metadata_answer,
     )
 
     def _nrows(df):
@@ -3552,7 +3563,7 @@ def test_metadata_partition_group_hybrid(spark, cdir):
         assert _nrows(got) == _nrows(exp), s
     # the fast path ANSWERED those (not the scan):
     entries = _attach(spark, cdir, stmts[0])
-    assert _metadata_partition_group(
+    assert _metadata_answer(
         spark, cdir, stmts[0], entries
     ) is not None
     # interior files stay CLOSED: rename every file whose k-span lies
@@ -3574,7 +3585,7 @@ def test_metadata_partition_group_hybrid(spark, cdir):
     try:
         for p in hidden:
             os.rename(p, p + ".hidden")
-        got = _metadata_partition_group(spark, cdir, stmts[0], entries)
+        got = _metadata_answer(spark, cdir, stmts[0], entries)
         assert got is not None and _nrows(got) == exp_rows
     finally:
         for p in hidden:
@@ -3585,12 +3596,12 @@ def test_metadata_partition_group_hybrid(spark, cdir):
         "SELECT DAY(ts) AS g, COUNT(*) AS n FROM ghx WHERE x >= 0 "
         "GROUP BY DAY(ts)"
     )
-    assert _metadata_partition_group(spark, cdir, s, entries) is None
+    assert _metadata_answer(spark, cdir, s, entries) is None
     assert _nrows(execute_sql(spark, s, cdir)) == _nrows(spark.sql(s))
     # MoR deletes refuse — real execution sees the drop
     execute_sql(spark, "DELETE FROM ghx WHERE k = 7", cdir)
     entries2 = _attach(spark, cdir, stmts[0])
-    assert _metadata_partition_group(
+    assert _metadata_answer(
         spark, cdir, stmts[0], entries2
     ) is None
     assert _nrows(execute_sql(spark, stmts[0], cdir)) == _nrows(
@@ -3609,7 +3620,7 @@ def test_metadata_temporal_minmax(spark, cdir):
     import os
 
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_agg, _metadata_range_count,
+        _attach, _metadata_answer,
     )
 
     execute_sql_script(
@@ -3642,7 +3653,7 @@ def test_metadata_temporal_minmax(spark, cdir):
             src = os.path.join(root, f)
             os.rename(src, src + ".away")
             moved.append(src)
-        got2 = _metadata_agg(spark, cdir, s, entries)
+        got2 = _metadata_answer(spark, cdir, s, entries)
         assert got2 is not None and _rows(got2) == exp_rows
         # the range hybrid folds interior temporal extremes: only the
         # k=1000 boundary file may open, and it is renamed away too —
@@ -3651,7 +3662,7 @@ def test_metadata_temporal_minmax(spark, cdir):
             "SELECT MAX(ts) AS hi, COUNT(*) AS n FROM wmk "
             "WHERE k BETWEEN 0 AND 1999"
         )
-        got3 = _metadata_range_count(spark, cdir, s2, entries)
+        got3 = _metadata_answer(spark, cdir, s2, entries)
         assert got3 is not None
         r = got3.first()
         assert r["n"] == 2000 and r["hi"] == exp_hi
@@ -3663,11 +3674,11 @@ def test_metadata_temporal_minmax(spark, cdir):
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
         entries = _attach(spark, cdir, s)
-        assert _metadata_agg(spark, cdir, s, entries) is None
+        assert _metadata_answer(spark, cdir, s, entries) is None
         assert _rows(execute_sql(spark, s, cdir)) == _rows(spark.sql(s))
         sd = "SELECT MAX(dd) AS dhi, COUNT(*) AS n FROM wmk"
         entries = _attach(spark, cdir, sd)
-        assert _metadata_agg(spark, cdir, sd, entries) is not None
+        assert _metadata_answer(spark, cdir, sd, entries) is not None
         assert _rows(execute_sql(spark, sd, cdir)) == _rows(
             spark.sql(sd)
         )
@@ -3679,8 +3690,9 @@ def test_topk_attach_pruning(spark, cdir):
     """Stats-guided TOP-K file pruning (round 13): ``ORDER BY col
     [DESC] LIMIT k`` opens only the threshold-crossing files (pinned
     by inputFiles), composes with WHERE claims, handles the temporal
-    order column, and declines — with row-identical answers — on ASC
-    with order-column nulls, MoR deletes, and residual conjuncts."""
+    order column, engages over position deletes, and declines — with
+    row-identical answers — on ASC with order-column nulls, equality
+    deletes, and residual conjuncts."""
     from data_engineering_challenge_spark.sql_exec import (
         _attach, _topk_attach,
     )
@@ -3729,13 +3741,13 @@ def test_topk_attach_pruning(spark, cdir):
         "SELECT k FROM tku WHERE v + 1 > 0 ORDER BY ts DESC LIMIT 10"
     )
     assert not fast
-    # ALIAS SHADOWING declines (advice, round 13): Spark resolves the
-    # unqualified ORDER BY token against the select-list alias (sorts
-    # by k), while the threshold would be computed on table column v —
-    # must decline, with row parity through the fallback path
+    # ALIAS SHADOWING: Spark resolves the unqualified ORDER BY token
+    # against the select-list alias (sorts by k); the plan's sort key
+    # traces through that alias to column k, so the threshold is
+    # computed on k and the prune is sound
     s = "SELECT k AS v FROM tku ORDER BY v DESC LIMIT 5"
-    fast, _ = probe(s)
-    assert not fast
+    fast, n_open = probe(s)
+    assert fast and n_open <= 3
     assert [tuple(r) for r in execute_sql(spark, s, cdir).collect()] \
         == [tuple(r) for r in spark.sql(s).collect()]
     # ...but a QUALIFIED order ref resolves to the table column in
@@ -3888,15 +3900,14 @@ def test_review_r13_date_literal_and_identifier(spark, cdir):
 
 
 def test_metadata_group_tails(spark, cdir):
-    """HAVING / ORDER BY / LIMIT tails on the grouped metadata paths
-    (round 13 — the full dashboard spelling): evaluated on the tiny
-    folded result, never on data; ORDER-sensitive parity with real
-    execution (group keys are unique, so the order is total); HAVING
-    may reference aggs the select list doesn't carry; refusals
-    (ordering by a non-key expression, HAVING on a non-agg) fall back
-    to the scan."""
+    """HAVING / ORDER BY / LIMIT tails on the grouped metadata answers:
+    they sit above the Aggregate in the optimized plan, so Spark
+    evaluates them over the tiny folded rows, never over data;
+    ORDER-sensitive parity with real execution (group keys are unique,
+    so the order is total); HAVING may reference aggs the select list
+    doesn't carry, and any expression over the group key works."""
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_partition_group,
+        _attach, _metadata_answer,
     )
 
     execute_sql_script(
@@ -3924,6 +3935,14 @@ def test_metadata_group_tails(spark, cdir):
         "GROUP BY DAY(ts) HAVING COUNT(*) >= 120 ORDER BY 1 LIMIT 4",
         "SELECT DAY(ts) AS g, AVG(v) AS a FROM gtl GROUP BY DAY(ts) "
         "HAVING MAX(v) < 2900 ORDER BY g",
+        # any expression above the Aggregate runs in Spark over the
+        # folded rows: ordering by a non-key expression, HAVING on the
+        # grouping alias
+        "SELECT DAY(ts) AS g, COUNT(*) AS n FROM gtl GROUP BY DAY(ts) "
+        "ORDER BY g + 1",
+        # unaliased: the answer keeps the field metadata Spark's own
+        # output carries (__autoGeneratedAlias)
+        "SELECT COUNT(*), MAX(v) FROM gtl WHERE DAY(ts) = 3",
     ]
     for s in stmts:
         got = execute_sql(spark, s, cdir)
@@ -3934,21 +3953,18 @@ def test_metadata_group_tails(spark, cdir):
             tuple(r) for r in exp.collect()
         ], s
         entries = _attach(spark, cdir, s)
-        assert _metadata_partition_group(
+        assert _metadata_answer(
             spark, cdir, s, entries
         ) is not None, s
-    # refusals fall back with identical rows
-    for s in (
-        # ordering by a non-key, non-agg expression
+    # HAVING on the grouping alias: the optimizer pushes `day(ts) > 2`
+    # below the Aggregate, a range on a transform no fold claims — the
+    # scan answers, with Spark's own schema and rows
+    s = (
         "SELECT DAY(ts) AS g, COUNT(*) AS n FROM gtl GROUP BY DAY(ts) "
-        "ORDER BY g + 1",
-        # HAVING on a non-agg expression
-        "SELECT DAY(ts) AS g, COUNT(*) AS n FROM gtl GROUP BY DAY(ts) "
-        "HAVING g > 2",
-    ):
-        entries = _attach(spark, cdir, s)
-        assert _metadata_partition_group(spark, cdir, s, entries) is None
-        assert _rows(execute_sql(spark, s, cdir)) == _rows(spark.sql(s))
+        "HAVING g > 2"
+    )
+    got, exp = execute_sql(spark, s, cdir), spark.sql(s)
+    assert got.schema == exp.schema and _rows(got) == _rows(exp)
 
 
 def test_metadata_distinct_family(spark, cdir):
@@ -3961,7 +3977,7 @@ def test_metadata_distinct_family(spark, cdir):
     expression after DISTINCT is REJECTED by Spark (it resolves
     against the output list) and must not be fast-answered."""
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_partition_group,
+        _attach, _metadata_answer,
     )
 
     execute_sql_script(
@@ -4001,14 +4017,14 @@ def test_metadata_distinct_family(spark, cdir):
         else:
             assert sorted(gr) == sorted(er), s
         entries = _attach(spark, cdir, s)
-        assert _metadata_partition_group(
+        assert _metadata_answer(
             spark, cdir, s, entries
         ) is not None, s
     # Spark REJECTS ORDER BY the raw expression after DISTINCT — the
     # fast path must not answer what execution rejects
     s = "SELECT DISTINCT DAY(ts) AS g FROM gdf ORDER BY DAY(ts)"
     entries = _attach(spark, cdir, s)
-    assert _metadata_partition_group(spark, cdir, s, entries) is None
+    assert _metadata_answer(spark, cdir, s, entries) is None
     with pytest.raises(Exception):
         execute_sql(spark, s, cdir).collect()
 
@@ -4022,7 +4038,7 @@ def test_review_r13_group_tail_semantics(spark, cdir):
     where Spark rejects; a temporal agg referenced only in ORDER BY
     still folds interior files."""
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_partition_group,
+        _attach, _metadata_answer,
     )
 
     def _nankey(rows):
@@ -4046,16 +4062,16 @@ def test_review_r13_group_tail_semantics(spark, cdir):
         """,
         cdir,
     )
-    # OR in HAVING: no crash, scan answers
+    # OR in HAVING: Spark evaluates it over the folded groups
     s = (
         "SELECT DAY(ts) AS g, COUNT(*) AS n FROM rvt GROUP BY DAY(ts) "
         "HAVING COUNT(*) > 5 OR COUNT(*) = 1"
     )
-    assert _nankey(execute_sql(spark, s, cdir).collect()) == _nankey(
-        spark.sql(s).collect()
-    )
+    got, exp = execute_sql(spark, s, cdir), spark.sql(s)
+    assert got.schema == exp.schema
+    assert _nankey(got.collect()) == _nankey(exp.collect())
     entries = _attach(spark, cdir, s)
-    assert _metadata_partition_group(spark, cdir, s, entries) is None
+    assert _metadata_answer(spark, cdir, s, entries) is not None
     # NaN group survives HAVING > and sorts GREATEST, fast-answered
     for s, ordered in (
         (
@@ -4094,7 +4110,7 @@ def test_review_r13_group_tail_semantics(spark, cdir):
         else:
             assert _nankey(got.collect()) == _nankey(exp.collect()), s
         entries = _attach(spark, cdir, s)
-        assert _metadata_partition_group(
+        assert _metadata_answer(
             spark, cdir, s, entries
         ) is not None, s
     # duplicate alias: refuse where Spark raises AMBIGUOUS_REFERENCE
@@ -4103,7 +4119,7 @@ def test_review_r13_group_tail_semantics(spark, cdir):
         "GROUP BY DAY(ts) ORDER BY z"
     )
     entries = _attach(spark, cdir, s)
-    assert _metadata_partition_group(spark, cdir, s, entries) is None
+    assert _metadata_answer(spark, cdir, s, entries) is None
     with pytest.raises(Exception):
         execute_sql(spark, s, cdir).collect()
     # caseSensitive alias miss refuses
@@ -4114,7 +4130,7 @@ def test_review_r13_group_tail_semantics(spark, cdir):
             "GROUP BY DAY(ts) ORDER BY G"
         )
         entries = _attach(spark, cdir, s)
-        assert _metadata_partition_group(
+        assert _metadata_answer(
             spark, cdir, s, entries
         ) is None
     finally:
@@ -4129,8 +4145,7 @@ def test_one_row_limit_tolerance(spark, cdir):
     result); the multi-row grouped shape keeps its own LIMIT
     semantics."""
     from data_engineering_challenge_spark.sql_exec import (
-        _attach, _metadata_agg, _metadata_count,
-        _metadata_range_count,
+        _attach, _metadata_answer,
     )
 
     execute_sql_script(
@@ -4145,25 +4160,22 @@ def test_one_row_limit_tolerance(spark, cdir):
         """,
         cdir,
     )
-    for s, fn in (
-        ("SELECT COUNT(*) AS n FROM lim LIMIT 1", _metadata_count),
-        ("SELECT SUM(v) AS s, AVG(v) AS a FROM lim LIMIT 1;", _metadata_agg),
-        (
-            "SELECT COUNT(*) AS n, MAX(k) AS hi FROM lim "
-            "WHERE k >= 100 LIMIT 5",
-            _metadata_range_count,
-        ),
+    for s in (
+        "SELECT COUNT(*) AS n FROM lim LIMIT 1",
+        "SELECT SUM(v) AS s, AVG(v) AS a FROM lim LIMIT 1;",
+        "SELECT COUNT(*) AS n, MAX(k) AS hi FROM lim "
+        "WHERE k >= 100 LIMIT 5",
     ):
         got = execute_sql(spark, s, cdir)
         exp = spark.sql(s.rstrip(";"))
         assert got.schema == exp.schema, s
         assert _rows(got) == _rows(exp), s
         entries = _attach(spark, cdir, s)
-        assert fn(spark, cdir, s, entries) is not None, s
+        assert _metadata_answer(spark, cdir, s, entries) is not None, s
     # LIMIT 0: empty result, no fast answer
     s = "SELECT COUNT(*) AS n FROM lim LIMIT 0"
     entries = _attach(spark, cdir, s)
-    assert _metadata_count(spark, cdir, s, entries) is None
+    assert _metadata_answer(spark, cdir, s, entries) is None
     assert execute_sql(spark, s, cdir).collect() == []
     # the grouped shape keeps its own LIMIT (not stripped)
     s = (
@@ -4240,6 +4252,19 @@ def test_select_pruning_decision_record(spark, cdir, caplog):
     assert pruned is None
     (rec,) = [r.pruning for r in caplog.records if hasattr(r, "pruning")]
     assert rec["dr"]["refused"] == "unmapped relation"
+    # the metadata answer and top-k pruning say what they did, in the
+    # same one record
+    (rec,) = records("SELECT COUNT(*) AS n FROM dr")
+    assert rec == {"metadata": "answered"}
+    (rec,) = records("SELECT k FROM dr ORDER BY k DESC LIMIT 3")
+    assert rec == {"metadata": "not an aggregate", "topk": "engaged"}
+    (rec,) = records("SELECT COUNT(*) AS n FROM dr WHERE k % 2 = 0")
+    assert rec["metadata"] == "residual conjunct"
+    assert rec["topk"] == "not ORDER BY ... LIMIT"
+    assert rec["dr"]["refused"] == "no claimable conjunct"
+    execute_sql(spark, "DELETE FROM dd WHERE v = 3", cdir)
+    (rec,) = records("SELECT COUNT(*) AS n FROM dd")
+    assert rec["metadata"] == "MoR deletes"
 
     # the record adds no Spark job
     sc = spark.sparkContext
