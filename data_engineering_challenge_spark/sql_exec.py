@@ -1142,6 +1142,26 @@ def _table_state(e: dict) -> dict:
     }
 
 
+class _Refused(Exception):
+    """A metadata answer or top-k prune declined; the message is the
+    reason the decision record carries."""
+
+
+def _scan_columns(st: dict, rels: list):
+    """``col_of`` — physical → logical column name — for one scan of a
+    table's files; `_Refused` ("unmapped relation") when the pinned
+    manifest does not list them all as data, or (evolved table) they
+    mix schema bindings."""
+    bind = st["bindings"].get(rels[0]) if st["fields"] else None
+    if not set(rels) <= st["data"] or (st["fields"] and (
+        bind is None or any(st["bindings"].get(f) != bind for f in rels)
+    )):
+        raise _Refused("unmapped relation")
+    return str if bind is None else {
+        p: st["fields"].get(i) for p, i in bind.items()
+    }.get
+
+
 def _scan_claims(spark, name: str, st: dict, rels: list, cond) -> None:
     """Fold one scan of a table's files into its walk state: a delete
     list scan is skipped, a scan of files the pinned manifest does not
@@ -1150,19 +1170,14 @@ def _scan_claims(spark, name: str, st: dict, rels: list, cond) -> None:
     into the table's."""
     if all(f in st["deletes"] for f in rels):
         return
-    bind = st["bindings"].get(rels[0]) if st["fields"] else None
-    if not all(f in st["data"] for f in rels) or (
-        st["fields"]
-        and (bind is None or any(st["bindings"].get(f) != bind for f in rels))
-    ):
-        st["refused"] = "unmapped relation"
+    try:
+        col_of = _scan_columns(st, rels)
+    except _Refused as exc:
+        st["refused"] = str(exc)
         return
     if cond is None:
         st["refused"] = "unfiltered scan"
         return
-    col_of = str if bind is None else {
-        p: st["fields"].get(i) for p, i in bind.items()
-    }.get
     try:
         c = _claims(
             cond, col_of, lambda e: _transform_of(spark, name, st, e, col_of)
@@ -1253,6 +1268,9 @@ def _claims(e, col_of, part_of) -> dict:
         a = _claims(e.left(), col_of, part_of)
         b = _claims(e.right(), col_of, part_of) if a or kind == "And" else {}
         return _and(a, b) if kind == "And" else _or(a, b)
+    if kind in ("EqualTo", "In", "InSet"):
+        pv = _point_values(e)
+        return {} if pv is None else _point_claims(*pv, col_of, part_of)
     if kind in _COMPARISONS:
         left, right = e.left(), e.right()
         side = _COMPARISONS[kind][0]
@@ -1260,44 +1278,14 @@ def _claims(e, col_of, part_of) -> dict:
             left, right = right, left
             side = _COMPARISONS[kind][1]
         lit = _literal(right)
-        if lit is None:
-            return {}
-        t, v = lit
-        if side == "eq":
-            return _point_claims(left, t, [v], col_of, part_of)
         col = _column(left, col_of)
-        if col is None:
+        if lit is None or col is None:
             return {}
+        v = lit[1]
         return {
             ("c", col): ("range", v, None) if side == "lo"
             else ("range", None, v)
         }
-    if kind == "In":
-        t, vals = None, []
-        lst = e.list()
-        for i in range(lst.size()):
-            m = lst.apply(i)
-            if m.nodeName() == "Literal" and m.value() is None:
-                continue  # a NULL member never matches
-            lit = _literal(m)
-            if lit is None:
-                return {}  # an expression or unclaimable-type member
-            t = lit[0]
-            vals.append(lit[1])
-        return _point_claims(e.value(), t, vals, col_of, part_of) if vals else {}
-    if kind == "InSet":
-        t = e.child().dataType().simpleString()
-        h = e.hset()
-        # one py4j round trip for the whole set; a member carrying the
-        # separator shows up as a count mismatch and claims nothing.
-        # FLOAT members would print shorter than their float32 value
-        raw = h.mkString("\u0001").split("\u0001") if h.size() else []
-        if len(raw) != h.size() or t == "float":
-            return {}
-        vals = [_value(x, t) for x in raw]
-        if None in vals:
-            return {}
-        return _point_claims(e.child(), t, vals, col_of, part_of)
     if kind == "StartsWith":
         col = _column(e.left(), col_of)
         lit = _literal(e.right())
@@ -1305,6 +1293,43 @@ def _claims(e, col_of, part_of) -> dict:
             return {}
         return {("s", col): lit[1]}
     return {}
+
+
+def _point_values(e) -> tuple | None:
+    """``(expression, type, python values)`` when condition ``e`` is
+    ``x = literal``, ``x IN (literals)`` or an ``InSet`` of claimable
+    values — NULL members dropped (they never match) — else None."""
+    kind = e.nodeName()
+    if kind == "EqualTo":
+        x, lit = e.left(), e.right()
+        if lit.nodeName() != "Literal":
+            x, lit = lit, x
+        hit = _literal(lit)
+        return None if hit is None else (x, hit[0], [hit[1]])
+    if kind == "In":
+        t, vals = None, []
+        for m in _items(e.list()):
+            if m.nodeName() == "Literal" and m.value() is None:
+                continue
+            hit = _literal(m)
+            if hit is None:
+                return None  # an expression or unclaimable-type member
+            t = hit[0]
+            vals.append(hit[1])
+        return (e.value(), t, vals) if vals else None
+    if kind == "InSet":
+        t = e.child().dataType().simpleString()
+        h = e.hset()
+        # one py4j round trip for the whole set; a member carrying the
+        # separator shows up as a count mismatch and claims nothing.
+        # FLOAT members would print shorter than their float32 value,
+        # and a NULL member would print as the string "null"
+        raw = h.mkString("\u0001").split("\u0001") if h.size() else []
+        if len(raw) != h.size() or t == "float" or h.contains(None):
+            return None
+        vals = [_value(x, t) for x in raw]
+        return None if not vals or None in vals else (e.child(), t, vals)
+    return None
 
 
 def _column(e, col_of) -> str | None:
@@ -1399,11 +1424,6 @@ def _pruned_read_args(claims: dict) -> dict:
         else:
             args.setdefault("ranges", {})[name] = _bounds(c)
     return args
-
-
-class _Refused(Exception):
-    """A metadata answer or top-k prune declined; the message is the
-    reason the decision record carries."""
 
 
 _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
@@ -1536,44 +1556,22 @@ def _partition_claim(spark, name: str, st: dict, c, col_of):
     disjunction of those on one transform — else None.  Values are the
     transform's output as the manifest records it (integral, date, or
     a non-empty string: hive writes '' and NULL as one marker)."""
-    kind = c.nodeName()
-    if kind == "Or":
+    if c.nodeName() == "Or":
         a = _partition_claim(spark, name, st, c.left(), col_of)
         b = _partition_claim(spark, name, st, c.right(), col_of)
         if a is None or b is None or a[0] != b[0]:
             return None
         return a[0], a[1] | b[1], a[2] & b[2]
-    if kind == "EqualTo":
-        e, lit = c.left(), c.right()
-        if lit.nodeName() != "Literal":
-            e, lit = lit, e
-        raw = [lit] if lit.nodeName() == "Literal" else None
-    elif kind == "In":
-        e = c.value()
-        raw = [m for m in _items(c.list()) if m.nodeName() != "Literal"
-               or m.value() is not None]
-        if any(m.nodeName() != "Literal" for m in raw):
-            return None
-    elif kind == "InSet":
-        e = c.child()
-        h = c.hset()
-        vals = h.mkString("\u0001").split("\u0001") if h.size() else []
-        raw = None if len(vals) != h.size() else vals
-    else:
+    pv = _point_values(c)
+    if pv is None:
         return None
-    t = e.dataType().simpleString()
-    if not raw or not (t in _INTEGRAL or t in ("string", "date")):
+    e, t, vals = pv
+    if not (t in _INTEGRAL or t in ("string", "date")) or "" in vals:
         return None
-    vals = set()
-    for m in raw:
-        v = _value(m if isinstance(m, str) else m.value(), t)
-        if v is None or v == "":
-            return None
-        vals.add(str(v))
     pname = _transform_of(spark, name, st, e, col_of)
     if pname is None:
         return None
-    return pname, vals, _null_rejected(e)
+    return pname, {str(v) for v in vals}, _null_rejected(e)
 
 
 def _bound(spark, c, col_of):
@@ -1666,12 +1664,14 @@ def _metadata_answer(
     plan: a SELECT whose plan is ``Project`` / ``Filter`` / ``Sort`` /
     ``GlobalLimit`` / ``LocalLimit`` nodes over ONE ``Aggregate`` over
     a scan of ALL the pinned data files of one catalog table (an
-    evolved table's per-epoch ``Union`` counts as one scan) answers
-    from the snapshot manifest: the Aggregate is replaced by its folded
-    rows and Spark evaluates everything above it (HAVING, ORDER BY,
-    LIMIT, output names).  ``df`` is the statement already analyzed
-    over the plain attach; ``note["metadata"]`` receives "answered" or
-    the refusal reason.  Returns None when the statement must scan.
+    evolved table's per-epoch ``Union`` counts as one scan when only
+    ``Project`` nodes sit over it) answers from the snapshot manifest:
+    the Aggregate is replaced by its folded rows and Spark evaluates
+    everything above it (HAVING, ORDER BY, LIMIT, output names)
+    without analyzing the rebuilt plan again.  ``df`` is the statement
+    already analyzed over the plain attach; ``note["metadata"]``
+    receives "answered" or the refusal reason.  Returns None when the
+    statement must scan.
 
     Accepted: no grouping, or one partition-transform grouping (also
     ``SELECT DISTINCT <transform>``); aggregates ``count(1)``,
@@ -1757,7 +1757,11 @@ def _fold_answer(spark, entries: dict, df: DataFrame) -> DataFrame:
         raise _Refused("not an aggregate")
     leaf = agg.child()
     branches = [leaf]
-    while leaf.nodeName() in ("Project", "Filter"):
+    # only Projects may sit over an evolved table's per-epoch Union: a
+    # Filter there holds what the optimizer could not push into the
+    # branches (a non-deterministic conjunct), which `_scan_chain`
+    # refuses as a residual filter
+    while leaf.nodeName() == "Project":
         leaf = leaf.child()
     if leaf.nodeName() == "Union":
         branches = _items(leaf.children())
@@ -1776,14 +1780,7 @@ def _fold_answer(spark, entries: dict, df: DataFrame) -> DataFrame:
         raise _Refused("MoR deletes")
     claims = []
     for (aliases, cond, _rel), (_r, rels) in zip(chains, files):
-        bind = st["bindings"].get(rels[0]) if st["fields"] else None
-        if not set(rels) <= st["data"] or (st["fields"] and (
-            bind is None or any(st["bindings"].get(f) != bind for f in rels)
-        )):
-            raise _Refused("unmapped relation")
-        col_of = str if bind is None else {
-            p: st["fields"].get(i) for p, i in bind.items()
-        }.get
+        col_of = _scan_columns(st, rels)
         claims.append(_exact_claims(spark, name, st, cond, col_of))
     if sum(len(r) for _rel, r in files) != len(st["data"]):
         raise _Refused("not a full scan")
@@ -1938,8 +1935,17 @@ def _fold_answer(spark, entries: dict, df: DataFrame) -> DataFrame:
     node = jvm.org.apache.spark.sql.catalyst.plans.logical.Project(
         _seq(spark, proj), lplan
     )
+    if any(a.nodeName() == "Sort" for a in above):
+        # the folded rows in ONE partition: a global Sort over them
+        # runs in one task instead of a range-partitioning shuffle
+        node = jvm.org.apache.spark.sql.catalyst.plans.logical.Repartition(
+            1, False, node
+        )
     for a in reversed(above):
         node = a.withNewChildren(_seq(spark, [node]))
+    # every node is resolved — the statement's optimized nodes over the
+    # folded rows — so Spark skips analyzing the rebuilt plan again
+    node.setAnalyzed()
     jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
         spark._jsparkSession, node
     )
