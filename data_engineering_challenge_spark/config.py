@@ -43,8 +43,8 @@ class PipelineConfig:
     api_throttle_s: float = 0.0
     # external mode: log the over-cap skip count (costs a group-by pass)
     log_skipped: bool = False
-    # report step: log summary totals (costs a second pass over the small
-    # report aggregate — off by default, like log_skipped)
+    # report step: log summary totals (costs an aggregate over the report
+    # partitions just written — off by default, like log_skipped)
     log_report_summary: bool = False
     # data-quality gate: run declarative expectation checks on the journeys
     # and report outputs and FAIL LOUD on violations (operators/quality.py;

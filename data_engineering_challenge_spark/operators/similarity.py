@@ -535,40 +535,6 @@ def pq_train_codebooks(
         return list(pool.map(_fit, range(m)))
 
 
-def _pq_sub_l2(vec_col: str, s: int, sub: int, centroid: list[float]) -> Column:
-    """Squared L2 between subvector s of ``vec_col`` and a literal
-    centroid — pure fold, no UDF."""
-    sv = F.slice(F.col(vec_col), s * sub + 1, sub)
-    diff = F.zip_with(
-        sv, F.array(*[F.lit(c) for c in centroid]), lambda a, b: (a - b) * (a - b)
-    )
-    return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def pq_encode_expr(
-    corpus: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Expression-form PQ encode (the r5–r14 implementation): per
-    subspace, the index of the nearest (squared-L2) codebook centroid —
-    m×codebook_k fold expressions per row.  Kept as the portable
-    reference implementation; :func:`pq_encode` is the vectorized twin
-    (bit-identical codes, measured ~6x cheaper per row) used everywhere."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    codes = []
-    for s in range(m):
-        dists = F.array(
-            *[_pq_sub_l2(vec_col, s, sub, c) for c in codebooks[s]]
-        )
-        codes.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
-    return corpus.select(
-        F.col(id_col), F.col(vec_col), F.array(*codes).alias("pq_code")
-    )
-
-
 def pq_encode(
     corpus: DataFrame,
     codebooks: list[list[list[float]]],
@@ -581,9 +547,11 @@ def pq_encode(
     the dominant per-row cost of the ADC scan; JVM row-at-a-time
     expression eval is slow at this arithmetic density).
 
-    BIT-IDENTICAL to :func:`pq_encode_expr` by construction, not by
-    tolerance (pinned by tests/test_scale_ops.py::test_pq_encode_kernel_
-    matches_expression): the JVM fold computes ``(cast(→double) −
+    BIT-IDENTICAL to the expression form it replaced (m×codebook_k fold
+    expressions per row, kept as the reference ``pq_encode_expr`` in
+    tests/test_scale_ops.py) by construction, not by tolerance (pinned by
+    tests/test_scale_ops.py::test_pq_encode_kernel_matches_expression):
+    the JVM fold computes ``(cast(→double) −
     literal)²`` summed LEFT-TO-RIGHT in double, ties broken by FIRST
     minimum (array_position); the kernel decodes the vector at its NATIVE
     width (float stays exact under the f32→f64 cast, double is used

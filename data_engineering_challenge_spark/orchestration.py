@@ -215,8 +215,10 @@ def attribution_pipeline_graph(
         """Row count of the artifact a step just WROTE — a footer-
         metadata read of the materialized parquet, never a re-execution
         of the step's lazy plan (re-running attribute()'s plan would
-        re-fire every external HTTP scorer call)."""
-        return spark.read.parquet(path).count()
+        re-fire every external HTTP scorer call).  Read through the
+        pipeline's schema memo: a full build with no journeys writes an
+        empty table, with no file a schema could be inferred from."""
+        return pipe._read(path).count()
 
     g = StepGraph()
     sensor: list[str] = []
@@ -235,8 +237,7 @@ def attribution_pipeline_graph(
 
     def step_attribute(ctx: dict) -> int:
         # empty-journeys guard mirrors AttributionPipeline.run: with no
-        # journeys, attribute() deliberately writes NOTHING — counting
-        # its output would read a missing (or stale prior-run) artifact
+        # journeys there is nothing to attribute or report
         if _written_count(cfg.journeys_path) == 0:
             return 0
         pipe.attribute()  # writes attribution_customer_journey

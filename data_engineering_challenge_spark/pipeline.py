@@ -1,8 +1,19 @@
 """Three-step pipeline orchestration (reference pipeline/pipeline.py:85-105).
 
 Same step surface — build-journeys → attribute → report — with each step a
-lazy DataFrame definition materialized by a parquet write; steps hand each
-other TABLES, not CSVs (CSV exports kept as optional parity artifacts).
+lazy DataFrame plan that executes exactly ONCE, by its parquet write; steps
+hand each other TABLES, not CSVs.  Whatever else a step needs from its
+output comes from that write, never from running the plan again:
+
+* emptiness and the partitions written come from an ``Observation`` on the
+  write (row count + partition values), never from a probe job;
+  attribute's emptiness is the count of its post-write verification job;
+* the CSV exports (the reference's artifacts, cj_builder.py:130,
+  channel_reporter.py:130) and the report summary scan the partitions the
+  write just produced instead of re-running the join or aggregate plan;
+* every table's schema is inferred at most once per pipeline instance (a
+  per-instance memo), so a warm instance runs no inference job.
+
 The reference's per-chunk DELETE+INSERT (api_client.py:139-149, a bug that
 erases prior chunks) becomes one atomic ``mode("overwrite")`` write.
 
@@ -16,8 +27,9 @@ from __future__ import annotations
 import logging
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, StructField, StructType
 
 from .config import PipelineConfig
 from .operators import attribution as attr
@@ -44,14 +56,63 @@ class AttributionPipeline:
         self.config = config or PipelineConfig()
         #: whether the last build_journeys / attribute produced no rows
         self._step_empty = False
+        #: path -> schema of every table this instance reads (its inputs and
+        #: its own outputs); per instance, never the process-wide memo: other
+        #: pipelines may rewrite the same output path with another model
+        self._schemas: dict[str, StructType] = {}
 
-    # -- inputs ------------------------------------------------------------
+    # -- tables ------------------------------------------------------------
+
+    def _read(self, path: str) -> DataFrame:
+        return io.read_parquet_cached_schema(self.spark, path, cache=self._schemas)
 
     def _table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.config.table_dir, f"{name}.parquet"))
+        return self._read(os.path.join(self.config.table_dir, f"{name}.parquet"))
 
     def _out(self, name: str) -> str:
         return os.path.join(self.config.table_dir, name)
+
+    def _write_partitioned(
+        self, df: DataFrame, path: str, part: str, ranged: bool
+    ) -> DataFrame | None:
+        """Execute ``df`` once by writing it to ``path`` partitioned by the
+        yyyy-MM-dd column ``part``, and return the rows this write produced
+        — read back from exactly the partitions it wrote, in ``df``'s
+        column order — or None when it wrote no rows.
+
+        A ranged run overwrites only the partitions it writes (dynamic
+        mode: the partition-level form of the reference's DELETE+INSERT
+        idempotency, channel_reporter.py:99) and every other date survives;
+        a full run keeps static overwrite so the rebuild is complete, even
+        to an empty table.  The row count and partition values come from a
+        fresh Observation on the write job itself."""
+        obs = Observation()
+        io.write_parquet(
+            df.observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.collect_set(F.col(part).cast("date")).alias("parts"),
+            ),
+            path,
+            partition_by=[part],
+            dynamic_partitions=ranged,
+        )
+        # the schema a read of the table infers — the data columns, nullable,
+        # then the partition column typed from its directory names — kept so
+        # no read infers it, and so an empty table (a write of no rows
+        # leaves no file to infer from) still reads
+        self._schemas[path] = StructType(
+            [StructField(f.name, f.dataType) for f in df.schema if f.name != part]
+            + [StructField(part, DateType())]
+        )
+        seen = obs.get
+        if not seen["n"]:
+            return None
+        return (
+            self._read(path)
+            .where(F.col(part).isin(seen["parts"]))
+            .select(*df.columns)
+        )
 
     def _score_fn(self):
         """Scorer for model="external": the HTTP adapter when api_url is
@@ -101,10 +162,6 @@ class AttributionPipeline:
             end_date=end_date,
             salt_buckets=salt,
         )
-        if journeys.isEmpty():  # empty guard, pipeline.py:91-93
-            log.warning("no journeys built — aborting step")
-            self._step_empty = True
-            return journeys
         if self.config.validate_outputs:
             from .operators import quality as qa
 
@@ -116,29 +173,26 @@ class AttributionPipeline:
                     qa.expect_unique("conversion_id", "session_id"),
                 ],
             )
-        # date-partitioned layout: a date-ranged re-run (the reference's
-        # DELETE+INSERT idempotency, channel_reporter.py:99) prunes to the
-        # affected partitions instead of rescanning the whole table, and —
-        # via dynamic partition overwrite — REPLACES only the partitions in
-        # the range while every untouched date survives; a full run keeps
-        # static overwrite so the rebuild is complete
+        # date-partitioned layout: a date-ranged re-run prunes to and
+        # replaces only the affected partitions
         journeys = journeys.withColumn(
             "conv_date", F.date_format("conv_ts", "yyyy-MM-dd")
         )
-        ranged = start_date is not None or end_date is not None
-        io.write_parquet(
+        written = self._write_partitioned(
             journeys,
             self.config.journeys_path,
-            partition_by=["conv_date"],
-            dynamic_partitions=ranged,
+            "conv_date",
+            ranged=start_date is not None or end_date is not None,
         )
-        if self.config.csv_exports:
-            csv = journeys.withColumn(
+        self._step_empty = written is None
+        if written is None:  # empty guard, pipeline.py:91-93
+            log.warning("no journeys built — aborting step")
+        elif self.config.csv_exports:
+            csv = written.withColumn(
                 "timestamp", F.date_format("timestamp", "yyyy-MM-dd HH:mm:ss")
             ).drop("conv_ts", "conv_date")
             io.write_csv(csv, self.config.journeys_path.replace(".parquet", ".csv"),
                          single_file=True)
-        self._step_empty = False
         return journeys
 
     # -- step 2: attribute (reference api_client.py:153-252) ---------------
@@ -146,11 +200,7 @@ class AttributionPipeline:
     def attribute(self, journeys: DataFrame | None = None) -> DataFrame:
         cfg = self.config
         if journeys is None:
-            journeys = self.spark.read.parquet(cfg.journeys_path)
-        if journeys.isEmpty():  # zero-records guard, pipeline.py:98-100
-            log.warning("no journeys to attribute")
-            self._step_empty = True
-            return journeys
+            journeys = self._read(cfg.journeys_path)
 
         if cfg.model == "external":
             if cfg.log_skipped:
@@ -177,9 +227,9 @@ class AttributionPipeline:
         io.write_parquet(attributed, self._out("attribution_customer_journey"))
 
         # post-write verification (api_client.py:254-268); the same job
-        # counts the attributed conversions
+        # counts the attributed conversions, which is the step's emptiness
         check = attr.verify_attribution(
-            self.spark.read.parquet(self._out("attribution_customer_journey"))
+            self._read(self._out("attribution_customer_journey"))
         )
         n, bad = check.agg(
             F.count(F.lit(1)),
@@ -187,6 +237,8 @@ class AttributionPipeline:
         ).first()
         if bad:
             log.warning("%d conversions with non-unit ihc sums", bad)
+        if n == 0:  # zero-records guard, pipeline.py:98-100
+            log.warning("no journeys to attribute")
         self._step_empty = n == 0
         return attributed
 
@@ -198,7 +250,7 @@ class AttributionPipeline:
         out = rpt.channel_report(
             self._table("session_sources"),
             self._table("session_costs"),
-            self.spark.read.parquet(self._out("attribution_customer_journey")),
+            self._read(self._out("attribution_customer_journey")),
             self._table("conversions"),
             start_date=start_date,
             end_date=end_date,
@@ -215,24 +267,25 @@ class AttributionPipeline:
                     qa.expect_between("ihc", 0, float("inf")),
                 ],
             )
-        # partitioned by report date: a ranged re-run overwrites only the
-        # affected date partitions (dynamic mode), a full run rebuilds all
-        io.write_parquet(
+        written = self._write_partitioned(
             out,
             self.config.report_path,
-            partition_by=["date"],
-            dynamic_partitions=start_date is not None or end_date is not None,
+            "date",
+            ranged=start_date is not None or end_date is not None,
         )
+        if written is None:
+            log.warning("no report rows written")
+            return out
         if self.config.csv_exports:
             io.write_csv(
-                out.withColumn("date", F.date_format("date", "yyyy-MM-dd")),
+                written.withColumn("date", F.date_format("date", "yyyy-MM-dd")),
                 self.config.report_path.replace(".parquet", ".csv"),
                 single_file=True,
             )
         if self.config.log_report_summary:
-            # optional second pass over the (small) report aggregate, gated
-            # like log_skipped so the default run does no extra job
-            summary = rpt.report_summary(out).collect()[0]
+            # optional extra job over the written partitions, gated like
+            # log_skipped so the default run does none
+            summary = rpt.report_summary(written).first()
             log.info(
                 "report: %d rows, total cost %.2f, attributed revenue %.2f",
                 summary.n_rows, summary.total_cost or 0.0,
@@ -245,9 +298,9 @@ class AttributionPipeline:
     def run(
         self, start_date: str | None = None, end_date: str | None = None
     ) -> DataFrame | None:
-        # each step records whether it produced rows (`_step_empty`, from
-        # jobs it runs anyway): re-testing the lazy plans would run the
-        # as-of join and the attribution again
+        # each plan executes once, by its step's write; `_step_empty` comes
+        # from that write (step 1's Observation) or from the verification
+        # job step 2 runs anyway, so deciding to stop costs no job
         self.build_journeys(start_date, end_date)
         if self._step_empty:
             return None

@@ -76,16 +76,22 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
 _SCHEMA_CACHE: dict[str, StructType] = {}
 
 
-def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet_cached_schema(
+    spark: SparkSession, path: str, cache: dict[str, StructType] | None = None
+) -> DataFrame:
     """Parquet scan with a process-cached schema — identical plan to
     :func:`read_parquet_table` (pushdown/pruning unaffected), minus the
     per-call footer-inference round trip.  Only for paths whose schema is
-    stable for the life of the process (the driver testdata is)."""
+    stable for the life of the process (the driver testdata is) — or for
+    the life of ``cache``, the caller's own memo used in place of the
+    process-wide one (a pipeline's outputs, which another pipeline may
+    rewrite under the same path with another schema)."""
     ensure_instant_timestamps(spark)
-    sch = _SCHEMA_CACHE.get(path)
+    memo = _SCHEMA_CACHE if cache is None else cache
+    sch = memo.get(path)
     if sch is None:
         sch = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[path] = sch
+        memo[path] = sch
     return spark.read.schema(sch).parquet(path)
 
 

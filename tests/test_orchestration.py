@@ -129,3 +129,32 @@ def test_attribution_dag_matches_direct_run(spark, tmp_path):
         ).collect())
     )
     assert got == want and len(got) > 0
+
+
+def test_attribution_dag_over_empty_input(spark, tmp_path):
+    """With no conversions the full build writes an EMPTY journeys table
+    (static overwrite; Spark leaves no data file to infer a schema from):
+    the DAG still runs every step and counts 0 rows for each."""
+    from data_engineering_challenge_spark.config import PipelineConfig
+
+    star = tmp_path / "star"
+    for name, ddl in (
+        ("conversions", "conv_id bigint, user_id bigint, conv_ts timestamp, revenue double"),
+        ("session_sources", "session_id bigint, user_id bigint, ts timestamp, "
+         "channel_name string, holder_engagement int, closer_engagement int, "
+         "impression_interaction int"),
+        ("session_costs", "session_id bigint, cost double"),
+    ):
+        spark.createDataFrame([], ddl).write.parquet(str(star / f"{name}.parquet"))
+    cfg = PipelineConfig(
+        table_dir=str(star),
+        journeys_path=str(tmp_path / "journeys.parquet"),
+        report_path=str(tmp_path / "report.parquet"),
+        csv_exports=False,
+    )
+    ctx = {"results": {}}  # run() copies the dict, not the results in it
+    report = attribution_pipeline_graph(spark, cfg).run(ctx)
+    assert [r["status"] for r in report.values()] == ["ok"] * 3
+    assert ctx["results"] == {
+        "build_journeys": 0, "send_to_api": 0, "generate_report": 0,
+    }

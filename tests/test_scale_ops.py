@@ -622,6 +622,34 @@ def test_pq_exact_on_quantized_vectors(spark):
     assert len(exact) == 5
 
 
+def _pq_sub_l2(vec_col: str, s: int, sub: int, centroid: list[float]):
+    """Squared L2 between subvector s of ``vec_col`` and a literal
+    centroid — pure fold, no UDF."""
+    sv = F.slice(F.col(vec_col), s * sub + 1, sub)
+    diff = F.zip_with(
+        sv, F.array(*[F.lit(c) for c in centroid]), lambda a, b: (a - b) * (a - b)
+    )
+    return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def pq_encode_expr(corpus, codebooks, id_col="vec_id", vec_col="embedding"):
+    """Expression-form PQ encode (the r5–r14 engine implementation), the
+    bit-identity reference for ``similarity.pq_encode``: per subspace, the
+    index of the nearest (squared-L2) codebook centroid — m×codebook_k
+    fold expressions per row."""
+    m = len(codebooks)
+    sub = len(codebooks[0][0])
+    codes = []
+    for s in range(m):
+        dists = F.array(
+            *[_pq_sub_l2(vec_col, s, sub, c) for c in codebooks[s]]
+        )
+        codes.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
+    return corpus.select(
+        F.col(id_col), F.col(vec_col), F.array(*codes).alias("pq_code")
+    )
+
+
 def test_pq_encode_kernel_matches_expression(spark):
     """The mapInArrow encode kernel is BIT-identical to the expression
     fold it replaced (r15) — pinned on the real float corpus, on an
@@ -632,7 +660,7 @@ def test_pq_encode_kernel_matches_expression(spark):
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     books = sim.pq_train_codebooks(emb, m=8, codebook_k=16, dim=64)
-    a = {r.vec_id: list(r.pq_code) for r in sim.pq_encode_expr(emb, books).collect()}
+    a = {r.vec_id: list(r.pq_code) for r in pq_encode_expr(emb, books).collect()}
     b = {r.vec_id: list(r.pq_code) for r in sim.pq_encode(emb, books).collect()}
     assert a == b
     # array<double> corpus: a centroid pair straddling a float32 rounding
@@ -644,7 +672,7 @@ def test_pq_encode_kernel_matches_expression(spark):
         "vec_id bigint, embedding array<double>",
     )
     da = {r.vec_id: list(r.pq_code)
-          for r in sim.pq_encode_expr(ddf, dbooks).collect()}
+          for r in pq_encode_expr(ddf, dbooks).collect()}
     db = {r.vec_id: list(r.pq_code)
           for r in sim.pq_encode(ddf, dbooks).collect()}
     assert da == db, (da, db)
