@@ -48,6 +48,16 @@ MODELS = {
 }
 
 
+def _read_schema(df: DataFrame, part: str) -> StructType:
+    """The schema a read of ``df`` written partitioned by the yyyy-MM-dd
+    column ``part`` infers: the data columns, nullable, then ``part``
+    typed from its directory names."""
+    return StructType(
+        [StructField(f.name, f.dataType) for f in df.schema if f.name != part]
+        + [StructField(part, DateType())]
+    )
+
+
 class AttributionPipeline:
     """Orchestrates the three steps (reference pipeline/pipeline.py:17-105)."""
 
@@ -97,14 +107,9 @@ class AttributionPipeline:
             partition_by=[part],
             dynamic_partitions=ranged,
         )
-        # the schema a read of the table infers — the data columns, nullable,
-        # then the partition column typed from its directory names — kept so
-        # no read infers it, and so an empty table (a write of no rows
-        # leaves no file to infer from) still reads
-        self._schemas[path] = StructType(
-            [StructField(f.name, f.dataType) for f in df.schema if f.name != part]
-            + [StructField(part, DateType())]
-        )
+        # kept so no read infers it, and so an empty table (a write of no
+        # rows leaves no file to infer from) still reads
+        self._schemas[path] = _read_schema(df, part)
         seen = obs.get
         if not seen["n"]:
             return None
@@ -140,6 +145,20 @@ class AttributionPipeline:
 
     # -- step 1: build journeys (reference cj_builder.py:135-155) ----------
 
+    def _journeys_plan(
+        self,
+        start_date: str | None = None,
+        end_date: str | None = None,
+        salt: int | None = None,
+    ) -> DataFrame:
+        return jny.build_journeys(
+            self._table("conversions"),
+            self._table("session_sources"),
+            start_date=start_date,
+            end_date=end_date,
+            salt_buckets=salt,
+        )
+
     def build_journeys(
         self, start_date: str | None = None, end_date: str | None = None
     ) -> DataFrame:
@@ -155,13 +174,7 @@ class AttributionPipeline:
             )
             if salt:
                 log.info("journey join: auto-salting with %d buckets", salt)
-        journeys = jny.build_journeys(
-            self._table("conversions"),
-            sessions,
-            start_date=start_date,
-            end_date=end_date,
-            salt_buckets=salt,
-        )
+        journeys = self._journeys_plan(start_date, end_date, salt)
         if self.config.validate_outputs:
             from .operators import quality as qa
 
@@ -200,7 +213,15 @@ class AttributionPipeline:
     def attribute(self, journeys: DataFrame | None = None) -> DataFrame:
         cfg = self.config
         if journeys is None:
-            journeys = self._read(cfg.journeys_path)
+            path = cfg.journeys_path
+            if path not in self._schemas and not any(
+                f.endswith(".parquet") for _, _, fns in os.walk(path) for f in fns
+            ):
+                # an empty full build leaves no data file to infer a schema
+                # from (e.g. built by another process): read it with the
+                # schema the build writes, so it reads as empty
+                self._schemas[path] = _read_schema(self._journeys_plan(), "conv_date")
+            journeys = self._read(path)
 
         if cfg.model == "external":
             if cfg.log_skipped:

@@ -1827,7 +1827,7 @@ def q_sql_group_range_hybrid(
     their recorded partition group WITHOUT BEING OPENED (pinned in
     tests/test_sql_exec.py by renaming them away), EXCLUDED files
     fold as nothing, and only window-EDGE or value-less files take
-    ONE grouped scan (`snapshots.snapshot_group_range_agg`).  The
+    ONE grouped scan (`snapshots.snapshot_fold` with a group).  The
     same trust gates as the one-row hybrid apply per group:
     predicate-column nulls demote the file, sums must be recorded and
     integral, extremes must be NaN-free, int64-wrapping group sums
@@ -2225,15 +2225,16 @@ def q_sql_metadata_partition_count(
     """METADATA-ONLY COUNT under a partition predicate (round 11 —
     Iceberg's partition-count path): ``SELECT COUNT(*) FROM t WHERE
     DAY(ts) = 15`` on a hidden-partitioned table is answered by
-    `snapshot_partition_count` from manifest row counts alone — every
+    `snapshot_fold` from manifest row counts alone — every
     row of a partitioned file shares its recorded transform value, so
     with no residual conjunct the sum over matching files IS the
     count, ZERO data-file reads at any scale (pinned in
     tests/test_sql_exec.py by renaming every data file away).  The
     shape is read off Catalyst's optimized plan
     (`sql_exec._metadata_answer`); any statement the metadata cannot
-    answer exactly — a residual conjunct, MoR deletes, mixed lineage —
-    falls back to the (file-pruned) scan.  The reference COUNTs by
+    answer exactly — a residual conjunct, MoR deletes — falls back to
+    the (file-pruned) scan; a file without a recorded partition value
+    is the one file the fold scans.  The reference COUNTs by
     scanning SQLite; on 100 TB this path answers without opening a
     file.  Build shared with `sql_show_partitions`
     (`_dpe_catalog`), cached per sf_dir."""
@@ -2318,7 +2319,8 @@ def q_sql_distinct_partitions(
     schema-identical to real execution (the analyzed expression's own
     type/nullability).  The "what days do we have?" statement every
     dashboard runs first; the reference scans SQLite for it.  MoR
-    deletes, mixed lineage, and non-transform expressions fall back.
+    deletes and non-transform expressions fall back; a file without a
+    recorded value is the one file the fold scans.
     Build shared with `sql_metadata_partition_count`
     (`_dpe_catalog`)."""
     from .sql_exec import execute_sql
@@ -2417,20 +2419,20 @@ def q_sql_metadata_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """METADATA-ONLY MIN/MAX/COUNT from plain SQL (round 11 —
     Iceberg's aggregate pushdown reaching the statement surface): a
     ``SELECT MIN/MAX/COUNT(*) FROM t`` statement over a stats-recorded
-    table answers from `snapshot_stats_agg` — per-file row counts and
+    table answers from `snapshot_fold` — per-file row counts and
     recorded min/max folded driver-side, ZERO data reads at any scale,
     schema-identical to real execution (the result reuses each
     column's own Spark type).  NUMERIC columns only: integral stats
     are value-exact; FLOAT/DOUBLE answer since round 12 under the
     write-time NaN counts (`_file_stats(nan_counts=True)` — Iceberg's
     nan_value_counts): a file whose count is zero proves its finite
-    footer stats hide nothing, a NaN-carrying or count-less file
-    refuses and the real scan runs (parquet writers EXCLUDE NaN from
+    footer stats hide nothing, a NaN-carrying or count-less file is
+    scanned on its own (parquet writers EXCLUDE NaN from
     min/max, so finite stats alone cannot match Spark's
     NaN-is-greatest ordering).  DATE and (UTC session) TIMESTAMP
-    stats convert to typed values; string stats refuse.  MoR deletes
-    and missing stats fall back to the real aggregation; a WHERE
-    routes to the partition or range folds of the same decider
+    stats convert to typed values; string columns refuse.  MoR
+    deletes fall back to the real aggregation, a file without stats
+    is scanned, and a WHERE folds through the same decider and fold
     (`sql_exec._metadata_answer`, read off Catalyst's optimized
     plan).  Zero-read
     pin in tests/test_sql_exec.py (files renamed away).  Build cached

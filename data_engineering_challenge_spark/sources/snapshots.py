@@ -8138,47 +8138,53 @@ def snapshot_stats_agg(
 ) -> DataFrame:
     """Metadata-only aggregation — ``COUNT(*)`` / ``MIN`` / ``MAX``
     answered from the MANIFEST alone, zero data-file reads (pinned in
-    tests by chmod-ing the data files unreadable): Iceberg's aggregate
+    tests by making the data files unreadable): Iceberg's aggregate
     pushdown, the reason a 100 TB table answers ``SELECT count(*)`` in
     milliseconds.  Per-file row counts are recorded at commit time
     (entry ``rows``); min/max come from the recorded per-file stats
     (``stats_cols`` at write time).
 
-    STRICT by design — refuses loudly instead of silently scanning:
+    The manifest half of `snapshot_fold` with no claim, STRICT by
+    design — raises ValueError with the fold's reason wherever that
+    fold would scan a file, instead of silently scanning:
     * MoR delete files present → counts/extremes would be stale
       (compact first, or run the real aggregation);
     * a file without a recorded row count (pre-row-recording commits)
       or without recorded stats for a requested column → the metadata
       cannot answer (re-commit/compact with ``stats_cols``, or scan);
-    * schema-evolved tables → recorded stats are keyed by PHYSICAL
-      column names, which renames recycle.
+    * FLOAT stats without a recorded NaN count of zero → finite stats
+      can hide NaNs, and Spark orders NaN above every number;
+    * DATE, TIMESTAMP and STRING columns → their stats are recorded
+      as strings, which only a scan returns typed;
+    * schema-evolved tables with ``cols`` → recorded stats are keyed
+      by PHYSICAL column names, which renames recycle.
 
     Empty files claim nothing and are skipped; an empty table answers
     ``n_rows = 0`` with NULL extremes.  Returns one row: ``n_rows``,
-    then ``min_<c>``/``max_<c>`` per requested column, typed by the
-    stats' JSON-primitive coercion (ints/floats native, dates and
-    timestamps as their recorded ISO-8601 strings).
-
-    The driver-side fold is exposed as `_stats_agg_values` (same
-    refusals, plain Python values) so the SQL metadata fast path can
-    answer without a DataFrame round-trip."""
-    n_rows, extremes = _stats_agg_values(root, cols, version)
+    then ``min_<c>``/``max_<c>`` per requested column (BIGINT for
+    integral stats, DOUBLE for float ones)."""
+    v = current_version(root) if version is None else version
+    if v is None:
+        raise FileNotFoundError(f"snapshot_stats_agg: no version at {root}")
+    try:
+        groups, boundary = _fold_manifest(
+            _read_manifest(root, v), None, {}, {}, list(cols), [], {}
+        )
+    except ValueError as exc:
+        raise ValueError(f"snapshot_stats_agg: {exc}") from None
+    if boundary:
+        f, why = next(iter(boundary.items()))
+        raise ValueError(
+            f"snapshot_stats_agg: {why} in {f} — write with "
+            "stats_cols=[...] (or compact with them), or aggregate the read"
+        )
+    n_rows, extremes, _sums = groups[None]
     vals: list = [n_rows]
     fields = ["n_rows BIGINT"]
-
-    def _sql_type(x) -> str:
-        if isinstance(x, bool) or x is None:
-            return "STRING"
-        if isinstance(x, int):
-            return "BIGINT"
-        if isinstance(x, float):
-            return "DOUBLE"
-        return "STRING"
-
     for c in cols:
         lo, hi = extremes[c]
         vals.extend([lo, hi])
-        ty = _sql_type(lo)
+        ty = "DOUBLE" if isinstance(lo, float) else "BIGINT"
         fields.extend([f"min_{c} {ty}", f"max_{c} {ty}"])
     return _local_rows(spark, [tuple(vals)], ", ".join(fields))
 
@@ -8199,398 +8205,6 @@ def _fold_sum(cur: tuple, sv) -> tuple:
     )
 
 
-def _stats_agg_values(
-    root: str,
-    cols: list[str],
-    version: int | None = None,
-    temporal_cols: dict | None = None,
-) -> tuple[int, dict]:
-    """`snapshot_stats_agg`'s driver-side fold: ``(n_rows, {col: (lo,
-    hi)})`` as plain Python values — same strict refusals, no Spark
-    round-trip (the SQL metadata fast path answers from this
-    directly).
-
-    ``temporal_cols`` (round 13 — the watermark query ``SELECT
-    MAX(ts) FROM t``): ``{col: 'date'|'timestamp'}`` converts that
-    column's recorded ISO stat strings to typed date/naive-UTC
-    datetime values via `_typed_temporal_stat` BEFORE folding, so the
-    fold is temporal-exact rather than trusting ISO lexicographic
-    order (mixed tz-suffix recordings from foreign writers would
-    break the string order).  An unparseable recorded stat refuses
-    loudly.  The CALLER gates timestamp columns on a UTC session."""
-    v = current_version(root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"snapshot_stats_agg: no version at {root}")
-    m = _read_manifest(root, v)
-    if m.get("delete_files"):
-        raise ValueError(
-            "snapshot_stats_agg: table has MoR delete files — metadata "
-            "counts/extremes would be stale; compact first or aggregate "
-            "the MoR read"
-        )
-    if m.get("fields"):
-        raise ValueError(
-            "snapshot_stats_agg: table is schema-evolved — recorded "
-            "stats are keyed by physical names; aggregate the read "
-            "instead"
-        )
-    rows_rec = m.get("rows") or {}
-    stats = m.get("stats") or {}
-    n_rows = 0
-    live: list[str] = []
-    for f in m["files"]:
-        r = rows_rec.get(f)
-        if r is None:
-            raise ValueError(
-                f"snapshot_stats_agg: no recorded row count for {f} "
-                "(commit predates row recording) — compact the table "
-                "or aggregate the read"
-            )
-        n_rows += int(r)
-        if r > 0:
-            live.append(f)
-    extremes: dict = {}
-    for c in cols:
-        lo = hi = None
-        for f in live:
-            st = (stats.get(f) or {}).get(c)
-            if st is None:
-                raise ValueError(
-                    f"snapshot_stats_agg: no recorded stats for column "
-                    f"{c!r} in {f} — write with stats_cols=[...] (or "
-                    "compact with them) to enable metadata min/max"
-                )
-            flo, fhi = st[0], st[1]
-            kind = (temporal_cols or {}).get(c)
-            if kind is not None:
-                flo = _typed_temporal_stat(flo, kind)
-                fhi = _typed_temporal_stat(fhi, kind)
-                if flo is None or fhi is None:
-                    raise ValueError(
-                        f"snapshot_stats_agg: recorded stats for "
-                        f"{c!r} in {f} do not parse as {kind} — "
-                        "aggregate the read"
-                    )
-                lo = flo if lo is None else min(lo, flo)
-                hi = fhi if hi is None else max(hi, fhi)
-                continue
-            # NaN refusal (round-11 review): a NaN in float stats makes
-            # the Python fold ORDER-DEPENDENT (max(5.0, nan) == 5.0 but
-            # max(nan, 5.0) == nan) and diverges from Spark's
-            # NaN-is-greatest ordering — refuse loudly, never fold a
-            # silently wrong extreme.
-            for x in (flo, fhi):
-                if isinstance(x, float) and x != x:
-                    raise ValueError(
-                        f"snapshot_stats_agg: NaN in recorded stats for "
-                        f"{c!r} in {f} — metadata extremes cannot match "
-                        "Spark's NaN ordering; aggregate the read"
-                    )
-            # FLOAT stats ride the parquet writer's NaN policy (NaN is
-            # EXCLUDED from min/max, so finite stats can hide NaNs) —
-            # trusted only when the write chokepoint recorded a NaN
-            # count of ZERO for the file (round 12, Iceberg's
-            # nan_value_counts).  An absent count (pre-round-12
-            # manifest) means "presence unknown": refuse.
-            if isinstance(flo, float) or isinstance(fhi, float):
-                nan = st[2] if len(st) > 2 else None
-                if nan is None:
-                    raise ValueError(
-                        f"snapshot_stats_agg: no recorded NaN count for "
-                        f"float column {c!r} in {f} — finite footer "
-                        "stats can hide NaNs; recommit/compact with "
-                        "stats_cols to record counts, or aggregate the "
-                        "read"
-                    )
-                if nan:
-                    raise ValueError(
-                        f"snapshot_stats_agg: {f} holds {nan} NaN "
-                        f"value(s) in {c!r} — metadata extremes cannot "
-                        "match Spark's NaN-is-greatest ordering; "
-                        "aggregate the read"
-                    )
-            lo = flo if lo is None else min(lo, flo)
-            hi = fhi if hi is None else max(hi, fhi)
-        extremes[c] = (lo, hi)
-    return n_rows, extremes
-
-
-def _stats_sums_values(
-    root: str, cols: list[str], version: int | None = None
-) -> tuple[int, dict]:
-    """Whole-table metadata ``SUM`` fold (round 13 — VERDICT r12 'Next
-    round #5'): ``(n_rows, {col: (sum, n_nonnull)})`` from the
-    per-file exact integral sums the write chokepoints record
-    (`_file_int_sums`) — plain Python values, zero data reads at any
-    scale.  The recorded sums are arbitrary-precision and the fold is
-    associative, so the result is decimal-exact; an all-NULL column
-    folds to ``(None, 0)`` exactly as Spark's SUM returns NULL.
-
-    STRICT refusals mirroring `_stats_agg_values` — raise, never a
-    silently wrong fold: MoR delete files (sums would be stale),
-    schema evolution (sums ride physical names), a live file without
-    a recorded row count or without a recorded sum for a requested
-    column (pre-round-13 commit, a non-integral column, or a column
-    outside the stats policy)."""
-    v = current_version(root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"snapshot_stats_sums: no version at {root}")
-    m = _read_manifest(root, v)
-    if m.get("delete_files"):
-        raise ValueError(
-            "snapshot_stats_sums: table has MoR delete files — metadata "
-            "sums would be stale; compact first or aggregate the MoR "
-            "read"
-        )
-    if m.get("fields"):
-        raise ValueError(
-            "snapshot_stats_sums: table is schema-evolved — recorded "
-            "sums are keyed by physical names; aggregate the read "
-            "instead"
-        )
-    rows_rec = m.get("rows") or {}
-    sums_rec = m.get("sums") or {}
-    n_rows = 0
-    out: dict = {c: (None, 0) for c in cols}
-    for f in m["files"]:
-        r = rows_rec.get(f)
-        if r is None:
-            raise ValueError(
-                f"snapshot_stats_sums: no recorded row count for {f} "
-                "(commit predates row recording) — compact the table "
-                "or aggregate the read"
-            )
-        n_rows += int(r)
-        if int(r) == 0:
-            continue
-        fsums = sums_rec.get(f) or {}
-        for c in cols:
-            sv = fsums.get(c)
-            if sv is None:
-                raise ValueError(
-                    f"snapshot_stats_sums: no recorded sum for column "
-                    f"{c!r} in {f} — recommit/compact with "
-                    "stats_cols=[...] (integral columns only) to "
-                    "enable metadata SUM/AVG"
-                )
-            out[c] = _fold_sum(out[c], sv)
-    return n_rows, out
-
-
-def snapshot_partition_sums(
-    root: str,
-    partition_eq: dict,
-    cols: list[str],
-    version: int | None = None,
-) -> tuple[int, dict]:
-    """Metadata ``SUM``/``AVG``/``COUNT(*)`` under PARTITION
-    equalities (round 13): ``(n_rows_matched, {col: (sum,
-    n_nonnull)})`` — the `snapshot_partition_count` matching semantics
-    (every row of a partitioned file shares its recorded transform
-    value; values compare as strings; a value may be a list) composed
-    with the per-file exact sums, zero data reads at any scale.
-
-    STRICT: refuses on MoR delete files, an unknown partition name, a
-    live file without a recorded row count or partition value (mixed
-    lineage), or a MATCHING file without a recorded sum for a
-    requested column."""
-    v = current_version(root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(
-            f"snapshot_partition_sums: no version at {root}"
-        )
-    if not partition_eq:
-        raise ValueError(
-            "snapshot_partition_sums: partition_eq must be non-empty"
-        )
-    m = _read_manifest(root, v)
-    if m.get("delete_files"):
-        raise ValueError(
-            "snapshot_partition_sums: table has MoR delete files — "
-            "metadata sums would be stale; compact first"
-        )
-    if m.get("fields"):
-        raise ValueError(
-            "snapshot_partition_sums: table is schema-evolved — "
-            "recorded sums are keyed by physical names; aggregate the "
-            "read instead"
-        )
-    transforms = (m.get("layout") or {}).get("partition_transforms") or {}
-    missing = [n for n in partition_eq if n not in transforms]
-    if missing:
-        raise ValueError(
-            f"snapshot_partition_sums: no partition transform recorded "
-            f"for {missing} — the table's layout declares "
-            f"{sorted(transforms)}"
-        )
-    rows_rec = m.get("rows") or {}
-    sums_rec = m.get("sums") or {}
-    pvals = m.get("partition_values") or {}
-    want = {
-        n: (
-            {str(x) for x in val}
-            if isinstance(val, (list, tuple, set))
-            else {str(val)}
-        )
-        for n, val in partition_eq.items()
-    }
-    if any(not s for s in want.values()):
-        raise ValueError(
-            "snapshot_partition_sums: an empty value list matches "
-            "nothing — refuse rather than answer 0 for a malformed "
-            "claim"
-        )
-    total = 0
-    out: dict = {c: (None, 0) for c in cols}
-    for f in m["files"]:
-        r = rows_rec.get(f)
-        if r is None:
-            raise ValueError(
-                f"snapshot_partition_sums: no recorded row count for "
-                f"{f} — compact the table or aggregate the read"
-            )
-        if int(r) == 0:
-            continue
-        rec = pvals.get(f) or {}
-        if any(n not in rec for n in want):
-            raise ValueError(
-                f"snapshot_partition_sums: {f} has no recorded value "
-                "for a claimed partition — mixed lineage; aggregate "
-                "the read instead"
-            )
-        if not all(rec[n] in s for n, s in want.items()):
-            continue
-        total += int(r)
-        fsums = sums_rec.get(f) or {}
-        for c in cols:
-            sv = fsums.get(c)
-            if sv is None:
-                raise ValueError(
-                    f"snapshot_partition_sums: no recorded sum for "
-                    f"column {c!r} in {f} — recommit/compact with "
-                    "stats_cols=[...] to enable metadata SUM/AVG"
-                )
-            out[c] = _fold_sum(out[c], sv)
-    return total, out
-
-
-def snapshot_row_count(root: str, version: int | None = None) -> int:
-    """Metadata-only TOTAL row count: the sum of recorded per-file row
-    counts — zero data reads, sound under schema evolution (a row is a
-    row whatever its columns).  STRICT: refuses on MoR delete files
-    (counts would be stale) or a file without a recorded count."""
-    v = current_version(root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"snapshot_row_count: no version at {root}")
-    m = _read_manifest(root, v)
-    if m.get("delete_files"):
-        raise ValueError(
-            "snapshot_row_count: table has MoR delete files — metadata "
-            "counts would be stale; compact first"
-        )
-    rows_rec = m.get("rows") or {}
-    total = 0
-    for f in m["files"]:
-        r = rows_rec.get(f)
-        if r is None:
-            raise ValueError(
-                f"snapshot_row_count: no recorded row count for {f} — "
-                "compact the table or count the read"
-            )
-        total += int(r)
-    return total
-
-
-def snapshot_partition_count(
-    root: str,
-    partition_eq: dict,
-    version: int | None = None,
-) -> int:
-    """Metadata-only ``COUNT(*)`` under PARTITION equalities (round 11
-    — Iceberg's partition-predicate count): every row of a
-    hidden-partitioned file shares the file's recorded transform value
-    (`_write_partitioned_files` groups by value before writing), so a
-    count whose WHERE is exactly partition equalities is the SUM of
-    matching files' recorded row counts — zero data reads at any
-    scale.
-
-    STRICT like `snapshot_stats_agg` — refuses loudly instead of
-    silently under-counting:
-    * MoR delete files present → counts would be stale;
-    * a file without a recorded row count, or WITHOUT a recorded
-      value for a claimed partition name (mixed plain/partitioned
-      lineage) → the metadata cannot answer exactly (a pruning read
-      keeps such files conservatively; an exact count cannot);
-    * an unknown partition name → the claim is not this table's.
-
-    ``partition_eq`` values compare as strings against the recorded
-    hive path values — callers must pass values whose ``str()`` is
-    the transform output's canonical form (the SQL layer's type
-    gating guarantees this).  A value may be a LIST (round 12 — the
-    ``day(ts) IN (1, 2)`` / same-transform OR shape): the file counts
-    when its recorded value matches ANY listed value; per-name sets
-    still AND together."""
-    v = current_version(root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(
-            f"snapshot_partition_count: no version at {root}"
-        )
-    if not partition_eq:
-        raise ValueError(
-            "snapshot_partition_count: partition_eq must be non-empty"
-        )
-    m = _read_manifest(root, v)
-    if m.get("delete_files"):
-        raise ValueError(
-            "snapshot_partition_count: table has MoR delete files — "
-            "metadata counts would be stale; compact first"
-        )
-    transforms = (m.get("layout") or {}).get("partition_transforms") or {}
-    missing = [n for n in partition_eq if n not in transforms]
-    if missing:
-        raise ValueError(
-            f"snapshot_partition_count: no partition transform recorded "
-            f"for {missing} — the table's layout declares "
-            f"{sorted(transforms)}"
-        )
-    rows_rec = m.get("rows") or {}
-    pvals = m.get("partition_values") or {}
-    want = {
-        n: (
-            {str(v) for v in val}
-            if isinstance(val, (list, tuple, set))
-            else {str(val)}
-        )
-        for n, val in partition_eq.items()
-    }
-    if any(not s for s in want.values()):
-        raise ValueError(
-            "snapshot_partition_count: an empty value list matches "
-            "nothing — refuse rather than answer 0 for a malformed "
-            "claim"
-        )
-    total = 0
-    for f in m["files"]:
-        r = rows_rec.get(f)
-        if r is None:
-            raise ValueError(
-                f"snapshot_partition_count: no recorded row count for "
-                f"{f} — compact the table or count the read"
-            )
-        if int(r) == 0:
-            continue  # an empty file matches nothing either way
-        rec = pvals.get(f) or {}
-        if any(n not in rec for n in want):
-            raise ValueError(
-                f"snapshot_partition_count: {f} has no recorded value "
-                f"for a claimed partition — mixed lineage; count the "
-                "read instead"
-            )
-        if all(rec[n] in s for n, s in want.items()):
-            total += int(r)
-    return total
-
-
 def _partition_strs(pv) -> list[str]:
     """A partition claim's value (or list of values) as the strings the
     manifest records."""
@@ -8605,9 +8219,8 @@ def _classify_range_file(
     fnulls: dict,
     rec_all: dict,
 ) -> tuple[str, list[int]]:
-    """The ONE per-file EXCLUDED / INTERIOR / boundary walk shared by
-    every hybrid metadata path (review, round 13 — previously three
-    hand-kept copies): ``('excluded', [])`` when a recorded partition
+    """`snapshot_fold`'s per-file EXCLUDED / INTERIOR / boundary walk:
+    ``('excluded', [])`` when a recorded partition
     value mismatches an equality or the file's whole [min, max] for
     some claimed column lies outside its window (every row provably
     fails the claim); ``('interior', pred_null_counts)`` when every
@@ -8617,8 +8230,8 @@ def _classify_range_file(
     recorded counts are returned for the caller to subtract or gate
     on; ``('boundary', ...)`` for anything weaker (missing or
     cross-typed stats, straddling spans, an absent partition value,
-    an unknown null count).  Callers layer their own trust gates
-    (extremes/sums/temporal) on top and demote interior to boundary
+    an unknown null count).  The fold layers its trust gates
+    (extremes/sums/temporal) on top and demotes interior to boundary
     as needed — the soundness of excluded/interior itself lives
     here."""
     interior = True
@@ -8694,46 +8307,6 @@ def _typed_stat(v, bound):
     return None
 
 
-def snapshot_range_count(
-    spark: SparkSession,
-    root: str,
-    bounds: dict,
-    version: int | None = None,
-) -> int:
-    """HYBRID metadata ``COUNT(*)`` under RANGE predicates (round 12 —
-    the Iceberg/DataFusion shape VERDICT r11 asked for): classify each
-    live file from its recorded stats as INTERIOR (every non-null row
-    provably satisfies every bound — folds from the recorded row and
-    null counts, the file is NEVER OPENED), EXCLUDED (provably
-    disjoint in some bound — folds as zero), or BOUNDARY (scanned with
-    the predicate re-applied).  On the canonical incremental shape
-    ``ts >= a AND ts < b`` over a clustered table, the boundary set is
-    the one or two window-edge files; everything else answers from the
-    manifest.
-
-    ``bounds``: ``{col: (lo, lo_strict, hi, hi_strict)}`` with TYPED
-    values — int for integral columns, ``datetime``/``date`` for
-    temporal ones (compared against the ISO-string stats via a typed
-    parse; the SQL layer gates literal types and the UTC session).  A
-    ``None`` lo/hi is open on that side.
-
-    Exactness argument: an interior file's non-null values all lie in
-    every bound's interval, its NULL rows fail any range predicate,
-    and at most ONE claimed column may carry a recorded non-zero null
-    count (``rows - nulls`` is then exact; two nullable dimensions
-    overlap unknowably and the file demotes to boundary).  Float/bool
-    bounds are refused by construction (`_typed_stat` — Spark's
-    NaN-is-greatest ordering breaks interval reasoning); files with
-    missing stats, unknown null counts, or unparseable stat strings
-    demote to boundary, never fold.
-
-    STRICT refusals (raise — the caller runs the statement normally):
-    MoR delete files (counts would be stale), schema evolution (stats
-    ride physical names), a file without a recorded row count, empty
-    ``bounds``."""
-    return snapshot_range_agg_values(spark, root, bounds, [], version)[0]
-
-
 def _nan_min(a, b):
     """Fold one MIN candidate under Spark's NaN-is-greatest ordering:
     NaN loses to any finite value (MIN is NaN only when every value
@@ -8759,527 +8332,237 @@ def _nan_max(a, b):
     return max(a, b)
 
 
-def snapshot_range_agg_values(
-    spark: SparkSession,
-    root: str,
+def _fold_acc(cols: list, sum_cols: list) -> list:
+    """One group's fold accumulator: ``[count, {col: (lo, hi)}, {col:
+    (sum, n_nonnull)}]``."""
+    return [
+        0, {c: (None, None) for c in cols}, {c: (None, 0) for c in sum_cols}
+    ]
+
+
+def _fold_manifest(
+    m: dict,
+    group: str | None,
     bounds: dict,
-    cols: list[str],
-    version: int | None = None,
-    schema=None,
-    partition_eq: dict | None = None,
-    sum_cols: list[str] | None = None,
-    temporal_cols: dict | None = None,
-):
-    """`snapshot_range_count`'s general form (round 12): ``(n_rows,
-    {col: (lo, hi)})`` for COUNT(*) plus MIN/MAX over ``cols``, all
-    under the RANGE predicates in ``bounds`` — interior files fold
-    from recorded metadata, boundary files are scanned ONCE for count
-    and extremes together.
-
-    ``sum_cols`` (round 13) extends the same hybrid to ``SUM``/
-    ``AVG``: interior files fold their recorded per-file exact sums
-    (`_file_int_sums`), the boundary scan adds ``SUM``/``COUNT`` of
-    each column in the SAME single job, and the return grows a third
-    element ``{col: (sum, n_nonnull)}`` (the two-element shape is
-    unchanged when ``sum_cols`` is None).  A file folds its sum only
-    when EVERY claimed predicate column is recorded null-free there —
-    a filtered-out NULL-predicate row's value rides inside the
-    recorded sum and cannot be subtracted — and only when the sum is
-    recorded at all; anything weaker demotes to boundary.  Sum columns
-    must be INTEGRAL (recorded sums only exist for integral stats
-    columns; a float SUM is order-dependent in Spark itself) — a
-    caller-provided ``schema`` is checked up front, and the boundary
-    scan accumulates through ``decimal(38,0)`` so a per-file Spark
-    long SUM can never silently wrap inside the fold.
-
-    Extremes tighten the interior requirements: a file folds its
-    recorded agg-column stats only when EVERY claimed predicate
-    column's recorded null count is ZERO (a filtered-out NULL-pred
-    row could otherwise own the file's extreme) and the agg column's
-    stats are NaN-trustworthy (`_nan_free` — a NaN row would make
-    Spark's MAX NaN, which no finite fold can represent); anything
-    weaker demotes the file to boundary, where the scan computes
-    exact Spark semantics (NaN included — the driver-side fold uses
-    NaN-is-greatest combiners).  Agg-column NULLs are harmless in
-    interior files: recorded stats already exclude them, exactly as
-    MIN/MAX do.
-
-    ``temporal_cols`` (round 13 — the windowed watermark query):
-    ``{col: 'date'|'timestamp'}`` lets those agg columns' recorded
-    ISO stat strings fold as typed date/naive-UTC datetime values
-    (`_typed_temporal_stat`) instead of demoting every file to
-    boundary under the numeric-only gate; an unparseable stat demotes
-    that file.  The CALLER gates timestamp columns on a UTC session
-    (the boundary scan collects session-local naive datetimes, which
-    under UTC coincide with the recorded instants).
-
-    ``partition_eq`` (round 12) composes HIDDEN-PARTITION equalities
-    with the range bounds — `WHERE day(ts) = 5 AND k >= 100`: a file
-    recorded with a DIFFERENT value for a claimed name folds as
-    excluded (every row shares the file's value), a matching value
-    satisfies that conjunct for every row (no classification change),
-    and a file WITHOUT a recorded value demotes to boundary, where
-    the scan re-applies the semantic transform predicate."""
-    from pyspark.sql import functions as F
-
-    if not (bounds or partition_eq) or any(
-        b[0] is None and b[2] is None for b in bounds.values()
-    ):
-        raise ValueError(
-            "snapshot_range_agg: needs a claim, and every bound a side"
-        )
-    v = current_version(root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(
-            f"snapshot_range_agg: no version at {root}"
-        )
-    m = _read_manifest(root, v)
+    partition_eq: dict,
+    cols: list,
+    sum_cols: list,
+    temporal_cols: dict,
+) -> tuple[dict, dict]:
+    """`snapshot_fold`'s manifest half, zero data reads: ``(groups,
+    boundary)`` — the files it can answer folded into ``{group value:
+    accumulator}`` (`_fold_acc`), and ``{file: reason}`` for every file
+    only a scan can answer, with the first reason it was demoted."""
     if m.get("delete_files"):
         raise ValueError(
-            "snapshot_range_agg: table has MoR delete files — "
-            "metadata counts would be stale; compact first"
-        )
-    if m.get("fields"):
-        raise ValueError(
-            "snapshot_range_agg: table is schema-evolved — recorded "
-            "stats are keyed by physical names; aggregate the read "
-            "instead"
+            "table has MoR delete files — metadata counts would be "
+            "stale; compact first or aggregate the MoR read"
         )
     transforms = (m.get("layout") or {}).get("partition_transforms") or {}
-    if partition_eq:
-        missing = [n for n in partition_eq if n not in transforms]
-        if missing:
-            raise ValueError(
-                f"snapshot_range_agg: no partition transform recorded "
-                f"for {missing} — the table's layout declares "
-                f"{sorted(transforms)}"
-            )
-    pvals = m.get("partition_values") or {}
+    missing = [
+        n for n in [*partition_eq, *([group] if group else [])]
+        if n not in transforms
+    ]
+    if missing:
+        raise ValueError(
+            f"no partition transform recorded for {missing} — the "
+            f"table's layout declares {sorted(transforms)}"
+        )
     rows_rec = m.get("rows") or {}
     stats = m.get("stats") or {}
     nulls = m.get("nulls") or {}
     sums_rec = m.get("sums") or {}
-    want_sums = sum_cols is not None
-    sum_cols = list(sum_cols or [])
-    dec_scales: dict[str, int] = {}
-    if sum_cols and schema is not None:
-        # integral/decimal-only fold (rounds 13/14): recorded sums
-        # exist only for integral and decimal columns, and a float SUM
-        # is order-dependent in Spark itself — refuse rather than
-        # mis-type.  DECIMAL(p,s) columns fold UNSCALED integers
-        # (`_file_int_sums` records them that way), so the boundary
-        # scan must accumulate at the column's own scale and convert.
-        by_field = {f.name: f.dataType for f in schema.fields}
-        bad = []
+    pvals = m.get("partition_values") or {}
+    groups = {} if group else {None: _fold_acc(cols, sum_cols)}
+    boundary: dict = {}
+    for f in m["files"]:
+        r = rows_rec.get(f)
+        if r is None:
+            raise ValueError(
+                f"no recorded row count for {f} (commit predates row "
+                "recording) — compact the table or aggregate the read"
+            )
+        if int(r) == 0:
+            continue
+        fstats = stats.get(f) or {}
+        rec = pvals.get(f) or {}
+        status, null_cols = _classify_range_file(
+            bounds, partition_eq, fstats, nulls.get(f) or {}, rec
+        )
+        if status == "excluded":
+            continue
+        why = None
+        if status == "boundary":
+            why = "stats do not place the file inside the claims"
+        elif group and group not in rec:
+            why = f"no recorded {group!r} partition value"
+        elif len(null_cols) > 1 or (null_cols and (cols or sum_cols)):
+            # a filtered-out NULL-predicate row may own the file's
+            # extreme and rides inside its recorded sum; two nullable
+            # predicate columns overlap unknowably
+            why = "NULL rows in a predicate column"
+        ext: dict = {}
+        for c in cols if why is None else ():
+            st = fstats.get(c)
+            kind = temporal_cols.get(c)
+            if st is None:
+                why = f"no recorded stats for column {c!r}"
+            elif not _nan_free(st):
+                # parquet excludes NaN from min/max, and Spark orders
+                # NaN above every number
+                why = (
+                    f"no recorded NaN count for float column {c!r}"
+                    if len(st) < 3
+                    else f"{st[2]} NaN value(s) in {c!r}"
+                )
+            elif kind is not None:
+                ext[c] = tuple(_typed_temporal_stat(x, kind) for x in st[:2])
+                if None in ext[c]:
+                    why = f"recorded stats for {c!r} do not parse as {kind}"
+            elif all(
+                isinstance(x, (int, float)) and not isinstance(x, bool)
+                for x in st[:2]
+            ):
+                ext[c] = (st[0], st[1])
+            else:
+                # ISO or raw strings: only the scan returns typed values
+                why = f"non-numeric stats for column {c!r}"
+            if why is not None:
+                break
+        for c in sum_cols if why is None else ():
+            if c not in (sums_rec.get(f) or {}):
+                why = f"no recorded sum for column {c!r}"
+                break
+        if why is not None:
+            boundary[f] = why
+            continue
+        g = groups.setdefault(rec[group] if group else None,
+                              _fold_acc(cols, sum_cols))
+        g[0] += int(r) - sum(null_cols)
+        for c, (lo, hi) in ext.items():
+            g[1][c] = (_nan_min(g[1][c][0], lo), _nan_max(g[1][c][1], hi))
         for c in sum_cols:
-            dt = by_field.get(c)
-            ss = dt.simpleString() if dt is not None else None
-            if ss in ("tinyint", "smallint", "int", "bigint"):
-                continue
-            if ss is not None and ss.startswith("decimal("):
-                dec_scales[c] = int(dt.scale)
-                continue
-            bad.append(c)
-        if bad:
-            raise ValueError(
-                f"snapshot_range_agg: sum_cols must be integral or "
-                f"decimal; got {bad}"
-            )
-    sums_out: dict = {c: (None, 0) for c in sum_cols}
-    total = 0
-    extremes: dict = {c: (None, None) for c in cols}
-    boundary: list[str] = []
-    for f in m["files"]:
-        r = rows_rec.get(f)
-        if r is None:
-            raise ValueError(
-                f"snapshot_range_agg: no recorded row count for {f} "
-                "— compact the table or aggregate the read"
-            )
-        if int(r) == 0:
-            continue
-        fstats = stats.get(f) or {}
-        fnulls = nulls.get(f) or {}
-        status, null_cols = _classify_range_file(
-            bounds, partition_eq, fstats, fnulls, pvals.get(f) or {}
+            g[2][c] = _fold_sum(g[2][c], sums_rec[f][c])
+    if m.get("fields") and (cols or sum_cols or bounds or boundary):
+        raise ValueError(
+            "table is schema-evolved — recorded stats and files are "
+            "keyed by physical names; aggregate the read instead"
         )
-        if status == "excluded":
-            continue
-        interior = status == "interior"
-        if interior and sum_cols:
-            # sums: every pred column must be null-free here (a
-            # filtered-out NULL-pred row's value rides inside the
-            # recorded sum), and the sum must be recorded at all
-            if null_cols:
-                interior = False
-            else:
-                fsums = sums_rec.get(f) or {}
-                if any(c not in fsums for c in sum_cols):
-                    interior = False
-        tvals: dict = {}
-        if interior and cols:
-            # extremes: every pred column must be null-free in this
-            # file, and every agg column's stats trustworthy
-            if null_cols:
-                interior = False
-            for c in cols:
-                st = fstats.get(c)
-                if st is None or not _nan_free(st):
-                    interior = False
-                    break
-                kind = (temporal_cols or {}).get(c)
-                if kind is not None:
-                    # typed temporal fold (round 13): recorded ISO
-                    # strings convert to date/naive-UTC datetime; an
-                    # unparseable stat demotes to boundary
-                    tlo = _typed_temporal_stat(st[0], kind)
-                    thi = _typed_temporal_stat(st[1], kind)
-                    if tlo is None or thi is None:
-                        interior = False
-                        break
-                    tvals[c] = (tlo, thi)
-                    continue
-                # numeric-only fold (advice, round 13): temporal and
-                # string columns record ISO/raw STRINGS — folding them
-                # into extremes would return wrong-typed values (and
-                # TypeError against boundary-scan datetimes).  Demote
-                # to boundary, where the scan computes typed extremes.
-                if not all(
-                    isinstance(x, (int, float)) and not isinstance(x, bool)
-                    for x in (st[0], st[1])
-                ):
-                    interior = False
-                    break
-        if interior and len(null_cols) <= 1:
-            total += int(r) - (null_cols[0] if null_cols else 0)
-            for c in cols:
-                st = tvals.get(c) or fstats[c]
-                lo0, hi0 = extremes[c]
-                extremes[c] = (
-                    _nan_min(lo0, st[0]), _nan_max(hi0, st[1])
-                )
-            if sum_cols:
-                # null_cols is provably empty here (sums demote on
-                # any predicate-column nulls above)
-                fsums = sums_rec.get(f) or {}
-                for c in sum_cols:
-                    sv = fsums[c]
-                    sums_out[c] = _fold_sum(sums_out[c], sv)
-        else:
-            boundary.append(f)
-    if boundary:
-        from .io import ensure_instant_timestamps
-
-        ensure_instant_timestamps(spark)
-        pred = None
-        for c, (lo, lo_s, hi, hi_s) in bounds.items():
-            if lo is not None:
-                term = (
-                    F.col(c) > F.lit(lo) if lo_s else F.col(c) >= F.lit(lo)
-                )
-                pred = term if pred is None else pred & term
-            if hi is not None:
-                term = (
-                    F.col(c) < F.lit(hi) if hi_s else F.col(c) <= F.lit(hi)
-                )
-                pred = term if pred is None else pred & term
-        for pn, pv in (partition_eq or {}).items():
-            # the SEMANTIC transform predicate, exactly as
-            # read_snapshot_pruned re-applies it — boundary files
-            # without a recorded value still answer correctly
-            term = F.expr(transforms[pn]).cast("string").isin(
-                _partition_strs(pv)
-            )
-            pred = term if pred is None else pred & term
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for i, c in enumerate(cols):
-            aggs.append(F.min(c).alias(f"__lo{i}"))
-            aggs.append(F.max(c).alias(f"__hi{i}"))
-        for i, c in enumerate(sum_cols):
-            # decimal(38,scale) accumulator: exact for integral
-            # (scale 0) and decimal inputs alike, immune to the
-            # silent int64 wrap of Spark's long SUM
-            sc = dec_scales.get(c, 0)
-            aggs.append(
-                F.sum(F.col(c).cast(f"decimal(38,{sc})")).alias(
-                    f"__s{i}"
-                )
-            )
-            aggs.append(F.count(c).alias(f"__sn{i}"))
-        # a caller-provided schema (the SQL layer passes its attached
-        # view's) skips the per-statement footer-inference job
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        row = (
-            reader.parquet(*[os.path.join(root, f) for f in boundary])
-            .where(pred)
-            .agg(*aggs)
-            .first()
-        )
-        total += int(row["__n"])
-        for i, c in enumerate(cols):
-            blo, bhi = row[f"__lo{i}"], row[f"__hi{i}"]
-            lo0, hi0 = extremes[c]
-            if blo is not None:
-                lo0 = _nan_min(lo0, blo)
-            if bhi is not None:
-                hi0 = _nan_max(hi0, bhi)
-            extremes[c] = (lo0, hi0)
-        for i, c in enumerate(sum_cols):
-            bs, bn = row[f"__s{i}"], int(row[f"__sn{i}"] or 0)
-            if bn > 0:
-                if bs is None:
-                    # non-null rows but a NULL partial: the boundary
-                    # job's decimal(38,·) accumulator overflowed
-                    # (non-ANSI NULL) — refuse loudly, never fold 0
-                    raise ValueError(
-                        "snapshot_range_agg: boundary sum overflowed "
-                        f"the decimal(38) accumulator for {c!r}"
-                    )
-                sc = dec_scales.get(c, 0)
-                if sc:
-                    # decimal boundary partial → exact UNSCALED int,
-                    # matching the recorded per-file form
-                    bs = _dec_unscaled(bs, sc)
-                    if bs is None:
-                        raise ValueError(
-                            "snapshot_range_agg: unscalable boundary "
-                            f"decimal sum for {c!r}"
-                        )
-                sums_out[c] = _fold_sum(sums_out[c], (bs, bn))
-    if want_sums:
-        return total, extremes, sums_out
-    return total, extremes
+    return groups, boundary
 
 
-def snapshot_group_range_agg(
+def snapshot_fold(
     spark: SparkSession,
     root: str,
-    pname: str,
-    group_expr: str,
-    bounds: dict,
-    cols: list[str],
     version: int | None = None,
-    schema=None,
+    group: str | None = None,
+    bounds: dict | None = None,
     partition_eq: dict | None = None,
-    sum_cols: list[str] | None = None,
+    cols: list | tuple = (),
+    sum_cols: list | tuple = (),
     temporal_cols: dict | None = None,
-) -> dict:
-    """`snapshot_range_agg_values`' GROUPED form (round 13 — the
-    dashboard query): COUNT(*) plus MIN/MAX over ``cols`` and SUM over
-    ``sum_cols``, grouped by the hidden-partition transform ``pname``
-    (semantic expression ``group_expr``), under the RANGE claims in
-    ``bounds`` and the transform equalities in ``partition_eq``.
-    Returns ``{group_value_str_or_None: [count, {col: (lo, hi)},
-    {col: (sum, n_nonnull)}]}`` — group keys are the transform
-    outputs as hive-path strings, exactly as the manifest records
-    them (the boundary scan CASTs its group expression to string so
-    both sides merge on one spelling; the SQL layer re-types once).
+    schema=None,
+) -> tuple[dict, dict]:
+    """The ONE metadata aggregate fold: ``COUNT(*)``, ``MIN``/``MAX``
+    over ``cols`` and ``SUM``/``AVG`` partials over ``sum_cols``, under
+    the range ``bounds`` (``{col: (lo, lo_strict, hi, hi_strict)}``,
+    typed values, a None side open) and hidden-partition equalities
+    ``partition_eq`` (``{name: value or list of values}``, compared as
+    the strings the manifest records), optionally grouped by the
+    partition transform ``group``.  Returns ``(groups, boundary)``:
+    ``{group value or None: [count, {col: (lo, hi)}, {col: (sum,
+    n_nonnull)}]}`` — group keys as the manifest records them; with no
+    ``group`` the one ``None`` group, kept even at count 0, else only
+    groups with rows — and ``{file: reason}`` for the files scanned.
 
-    Per-file classification follows `snapshot_range_agg_values`
-    verbatim — EXCLUDED folds as nothing, INTERIOR folds recorded
-    row/null counts (plus stats/sums under the same trust gates:
-    null-free predicate columns for extremes and sums, NaN-free
-    numeric stats for extremes, recorded sums for sums), and anything
-    weaker joins the ONE boundary job — with one addition: a file
-    missing a recorded ``pname`` value demotes to boundary, where the
-    scan computes its groups from the rows.  Groups whose final count
-    is ZERO are dropped (GROUP BY returns no row for them).  MoR
-    deletes and schema evolution refuse loudly; ``bounds`` may be
-    empty here (the grouped shape is useful under pure transform
-    equalities, and with MIN/MAX items even with no predicate at
-    all).  Sum columns must be integral (see the range form); the
-    boundary job accumulates SUM through decimal(38,0)."""
+    Every live file classifies through `_classify_range_file`:
+    EXCLUDED files fold as nothing; INTERIOR files fold their recorded
+    row and null counts, stats and sums when those can be trusted —
+    null-free predicate columns for extremes and sums, NaN-counted
+    numeric stats (``temporal_cols``: ``{col: 'date'|'timestamp'}``
+    parses those columns' ISO stats, `_typed_temporal_stat`), recorded
+    sums, a recorded ``group`` value; every other file joins ONE
+    boundary scan that re-applies the claims (each partition equality
+    as its semantic transform) and computes Spark's own semantics —
+    NaN through the `_nan_min` / `_nan_max` combiners, sums through a
+    ``decimal(38, scale)`` accumulator at the column's own scale (from
+    ``schema``, which also spares the scan a footer inference).  With
+    no claim every file is interior.
+
+    Sum columns must be integral or decimal; the caller gates
+    TIMESTAMP columns and bounds on a UTC session.  Refuses
+    (ValueError): MoR delete files, a file without a recorded row
+    count, an unknown partition name, and schema evolution when the
+    fold reads per-column stats or sums or must scan (a row count and
+    partition-equality counts stay sound: a row is a row whatever its
+    columns)."""
     from pyspark.sql import functions as F
 
-    if any(
-        b[0] is None and b[2] is None for b in (bounds or {}).values()
-    ):
-        raise ValueError(
-            "snapshot_group_range_agg: every bound needs at least one side"
-        )
     v = current_version(root) if version is None else version
     if v is None:
-        raise FileNotFoundError(
-            f"snapshot_group_range_agg: no version at {root}"
-        )
+        raise FileNotFoundError(f"snapshot_fold: no version at {root}")
     m = _read_manifest(root, v)
-    if m.get("delete_files"):
-        raise ValueError(
-            "snapshot_group_range_agg: table has MoR delete files — "
-            "metadata counts would be stale; compact first"
-        )
-    if m.get("fields"):
-        raise ValueError(
-            "snapshot_group_range_agg: table is schema-evolved — "
-            "recorded stats are keyed by physical names; aggregate "
-            "the read instead"
-        )
+    bounds, partition_eq = bounds or {}, partition_eq or {}
+    cols, sum_cols = list(cols), list(sum_cols)
+    groups, boundary = _fold_manifest(
+        m, group, bounds, partition_eq, cols, sum_cols, temporal_cols or {}
+    )
+    if not boundary:
+        return groups, boundary
+    from .io import ensure_instant_timestamps
+
+    ensure_instant_timestamps(spark)
     transforms = (m.get("layout") or {}).get("partition_transforms") or {}
-    if pname not in transforms:
-        raise ValueError(
-            f"snapshot_group_range_agg: no partition transform "
-            f"{pname!r} — the table's layout declares "
-            f"{sorted(transforms)}"
+    scales = {
+        c: getattr(schema[c].dataType, "scale", 0) if schema else 0
+        for c in sum_cols
+    }
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    df = reader.parquet(*[os.path.join(root, f) for f in boundary])
+    for c, (lo, lo_s, hi, hi_s) in bounds.items():
+        if lo is not None:
+            df = df.where(F.col(c) > lo if lo_s else F.col(c) >= lo)
+        if hi is not None:
+            df = df.where(F.col(c) < hi if hi_s else F.col(c) <= hi)
+    for n, pv in partition_eq.items():
+        df = df.where(
+            F.expr(transforms[n]).cast("string").isin(_partition_strs(pv))
         )
-    for n in partition_eq or {}:
-        if n not in transforms:
-            raise ValueError(
-                f"snapshot_group_range_agg: no partition transform "
-                f"recorded for {n!r}"
-            )
-    sum_cols = list(sum_cols or [])
-    if sum_cols and schema is not None:
-        by_name = {f.name: f.dataType.simpleString() for f in schema.fields}
-        bad = [
-            c
-            for c in sum_cols
-            if by_name.get(c) not in ("tinyint", "smallint", "int", "bigint")
-        ]
-        if bad:
-            raise ValueError(
-                f"snapshot_group_range_agg: sum_cols must be integral; "
-                f"got {bad}"
-            )
-    pvals = m.get("partition_values") or {}
-    rows_rec = m.get("rows") or {}
-    stats = m.get("stats") or {}
-    nulls = m.get("nulls") or {}
-    sums_rec = m.get("sums") or {}
-
-    def _fresh():
-        return [
-            0,
-            {c: (None, None) for c in cols},
-            {c: (None, 0) for c in sum_cols},
-        ]
-
-    groups: dict = {}
-    boundary: list[str] = []
-    for f in m["files"]:
-        r = rows_rec.get(f)
-        if r is None:
-            raise ValueError(
-                f"snapshot_group_range_agg: no recorded row count for "
-                f"{f} — compact the table or aggregate the read"
-            )
-        if int(r) == 0:
-            continue
-        fstats = stats.get(f) or {}
-        fnulls = nulls.get(f) or {}
-        rec_all = pvals.get(f) or {}
-        gval = rec_all.get(pname, "__ABSENT__")
-        status, null_cols = _classify_range_file(
-            bounds, partition_eq, fstats, fnulls, rec_all
-        )
-        if status == "excluded":
-            continue
-        # no recorded group value: the scan computes this file's
-        # groups from its rows
-        interior = status == "interior" and gval != "__ABSENT__"
-        if interior and sum_cols:
-            if null_cols:
-                interior = False
-            else:
-                fsums = sums_rec.get(f) or {}
-                if any(c not in fsums for c in sum_cols):
-                    interior = False
-        tvals: dict = {}
-        if interior and cols:
-            if null_cols:
-                interior = False
-            for c in cols:
-                st = fstats.get(c)
-                if st is None or not _nan_free(st):
-                    interior = False
-                    break
-                kind = (temporal_cols or {}).get(c)
-                if kind is not None:
-                    # typed temporal fold (round 13) — see
-                    # snapshot_range_agg_values
-                    tlo = _typed_temporal_stat(st[0], kind)
-                    thi = _typed_temporal_stat(st[1], kind)
-                    if tlo is None or thi is None:
-                        interior = False
-                        break
-                    tvals[c] = (tlo, thi)
-                    continue
-                if not all(
-                    isinstance(x, (int, float)) and not isinstance(x, bool)
-                    for x in (st[0], st[1])
-                ):
-                    interior = False
-                    break
-        if interior and len(null_cols) <= 1:
-            g = groups.setdefault(gval, _fresh())
-            g[0] += int(r) - (null_cols[0] if null_cols else 0)
-            for c in cols:
-                st = tvals.get(c) or fstats[c]
-                lo0, hi0 = g[1][c]
-                g[1][c] = (_nan_min(lo0, st[0]), _nan_max(hi0, st[1]))
-            if sum_cols:
-                fsums = sums_rec.get(f) or {}
-                for c in sum_cols:
-                    sv = fsums[c]
-                    g[2][c] = _fold_sum(g[2][c], sv)
-        else:
-            boundary.append(f)
-    if boundary:
-        from .io import ensure_instant_timestamps
-
-        ensure_instant_timestamps(spark)
-        pred = None
-        for c, (lo, lo_s, hi, hi_s) in (bounds or {}).items():
-            if lo is not None:
-                term = (
-                    F.col(c) > F.lit(lo) if lo_s else F.col(c) >= F.lit(lo)
-                )
-                pred = term if pred is None else pred & term
-            if hi is not None:
-                term = (
-                    F.col(c) < F.lit(hi) if hi_s else F.col(c) <= F.lit(hi)
-                )
-                pred = term if pred is None else pred & term
-        for n, pv in (partition_eq or {}).items():
-            term = F.expr(transforms[n]).cast("string").isin(
-                _partition_strs(pv)
-            )
-            pred = term if pred is None else pred & term
-        aggs = [F.count(F.lit(1)).alias("__n")]
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for i, c in enumerate(cols):
+        aggs += [F.min(c).alias(f"__lo{i}"), F.max(c).alias(f"__hi{i}")]
+    for i, c in enumerate(sum_cols):
+        # exact for integral (scale 0) and decimal inputs alike, immune
+        # to the silent int64 wrap of Spark's long SUM
+        acc = F.col(c).cast(f"decimal(38,{scales[c]})")
+        aggs += [F.sum(acc).alias(f"__s{i}"), F.count(c).alias(f"__sn{i}")]
+    keys = []
+    if group:
+        keys = [F.expr(transforms[group]).cast("string").alias("__g")]
+    for row in df.groupBy(*keys).agg(*aggs).collect():
+        g = groups.setdefault(row["__g"] if group else None,
+                              _fold_acc(cols, sum_cols))
+        g[0] += int(row["__n"])
         for i, c in enumerate(cols):
-            aggs.append(F.min(c).alias(f"__lo{i}"))
-            aggs.append(F.max(c).alias(f"__hi{i}"))
+            lo, hi = row[f"__lo{i}"], row[f"__hi{i}"]
+            if lo is not None:
+                g[1][c] = (_nan_min(g[1][c][0], lo), _nan_max(g[1][c][1], hi))
         for i, c in enumerate(sum_cols):
-            aggs.append(
-                F.sum(F.col(c).cast("decimal(38,0)")).alias(f"__s{i}")
-            )
-            aggs.append(F.count(c).alias(f"__sn{i}"))
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        df = reader.parquet(*[os.path.join(root, f) for f in boundary])
-        if pred is not None:
-            df = df.where(pred)
-        rows = (
-            df.groupBy(
-                F.expr(group_expr).cast("string").alias("__g")
-            )
-            .agg(*aggs)
-            .collect()
-        )
-        for row in rows:
-            g = groups.setdefault(row["__g"], _fresh())
-            g[0] += int(row["__n"])
-            for i, c in enumerate(cols):
-                blo, bhi = row[f"__lo{i}"], row[f"__hi{i}"]
-                lo0, hi0 = g[1][c]
-                if blo is not None:
-                    lo0 = _nan_min(lo0, blo)
-                if bhi is not None:
-                    hi0 = _nan_max(hi0, bhi)
-                g[1][c] = (lo0, hi0)
-            for i, c in enumerate(sum_cols):
-                bs, bn = row[f"__s{i}"], int(row[f"__sn{i}"] or 0)
-                if bn > 0:
-                    g[2][c] = _fold_sum(g[2][c], (bs, bn))
-    return {g: v for g, v in groups.items() if v[0] > 0}
+            s, n = row[f"__s{i}"], int(row[f"__sn{i}"] or 0)
+            if n and s is None:
+                # non-null rows but a NULL partial: the decimal(38)
+                # accumulator overflowed (non-ANSI NULL)
+                raise ValueError(
+                    f"boundary sum overflowed decimal(38) for {c!r}"
+                )
+            if n:
+                u = _dec_unscaled(s, scales[c])
+                if u is None:
+                    raise ValueError(f"unscalable boundary sum for {c!r}")
+                g[2][c] = _fold_sum(g[2][c], (u, n))
+    if group:
+        groups = {k: g for k, g in groups.items() if g[0] > 0}
+    return groups, boundary
 
 
 def snapshot_partitions(

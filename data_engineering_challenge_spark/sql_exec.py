@@ -1455,16 +1455,10 @@ def _utc(spark) -> bool:
 
 
 def _fold_reason(exc: ValueError) -> str:
-    """A snapshot fold's refusal as a decision-record reason."""
-    msg = str(exc)
-    for needle, why in (
-        ("MoR delete", "MoR deletes"),
-        ("schema-evolved", "evolved table"),
-        ("NaN", "NaN stats"),
-        ("mixed lineage", "mixed lineage"),
-    ):
-        if needle in msg:
-            return why
+    """`snapshots.snapshot_fold`'s refusal as a decision-record reason
+    (MoR deletes refuse before the fold)."""
+    if "schema-evolved" in str(exc):
+        return "evolved table"
     return "no recorded metadata"
 
 
@@ -1677,21 +1671,20 @@ def _metadata_answer(
     ``SELECT DISTINCT <transform>``); aggregates ``count(1)``,
     ``min``/``max``/``sum``/``avg`` over one column, and ``count(DISTINCT
     <transform>)``; a WHERE that translates exactly into range bounds
-    and partition equalities (`_exact_claims`).  The folds:
-    `snapshot_row_count`, `snapshot_partition_count` / `_sums`,
-    `_stats_agg_values` / `_stats_sums_values` with no WHERE,
-    `snapshot_range_agg_values` under bounds (interior files fold, edge
-    files scan once), `snapshot_group_range_agg` or the manifest's
-    per-file partition values for groups.
+    and partition equalities (`_exact_claims`).  One fold answers them
+    all, `snapshots.snapshot_fold`: files interior to the claims fold
+    from recorded counts, stats and sums, excluded files fold as
+    nothing, and every other file (straddling, NaN-carrying or
+    NaN-uncounted floats, no recorded value) joins one boundary scan.
 
-    Value semantics the folds cannot reproduce refuse: float MIN/MAX
-    over NaN-carrying or NaN-uncounted files, a SUM outside int64 and
-    AVG operands past 2^53 (Spark's long / double accumulators),
-    DECIMAL sums past their result precision and AVG with p+4 > 38 or
-    precision loss off, grouped DECIMAL sums, a NULL group of a string
-    transform (hive writes NULL and '' as one marker), TIMESTAMP
-    MIN/MAX outside a UTC session, MoR deletes, schema evolution beyond
-    a row count, and files without recorded values (mixed lineage)."""
+    Value semantics the fold cannot reproduce refuse: a SUM outside
+    int64 and AVG operands past 2^53 (Spark's long / double
+    accumulators), DECIMAL sums past their result precision and AVG
+    with p+4 > 38 or precision loss off, grouped DECIMAL sums, a NULL
+    group of a string transform (hive writes NULL and '' as one
+    marker), TIMESTAMP MIN/MAX outside a UTC session, MoR deletes,
+    schema evolution beyond row and partition-equality counts, and
+    files without a recorded row count."""
     if df is None:
         try:
             df = spark.sql(sql)
@@ -1847,38 +1840,13 @@ def _fold_answer(spark, entries: dict, df: DataFrame) -> DataFrame:
         c: types[c].simpleString() for c in mm
         if types[c].simpleString() in ("date", "timestamp")
     }
-    root, v = st["root"], st["version"]
-    if pname is not None:
-        groups_out = _group_fold(
-            spark, st, pname, bounds, peq, mm, sums, temporal, sdf.schema
-        )
-        if gtype == "string" and None in groups_out:
-            raise _Refused("hive NULL/'' group")
-    elif not bounds and not peq:
-        ext: dict = {}
-        sv: dict = {}
-        if sums:
-            n, sv = sn._stats_sums_values(root, sums, v)
-        if mm:
-            n, ext = sn._stats_agg_values(
-                root, mm, v, temporal_cols=temporal or None
-            )
-        elif not sums:
-            n = sn.snapshot_row_count(root, v)
-        groups_out = {None: (n, ext, sv)}
-    elif not bounds and not mm:
-        if sums:
-            n, sv = sn.snapshot_partition_sums(root, peq, sums, v)
-        else:
-            n, sv = sn.snapshot_partition_count(root, peq, v), {}
-        groups_out = {None: (n, {}, sv)}
-    else:
-        n, ext, sv = sn.snapshot_range_agg_values(
-            spark, root, bounds, mm, v, schema=sdf.schema,
-            partition_eq=peq or None, sum_cols=sums,
-            temporal_cols=temporal or None,
-        )
-        groups_out = {None: (n, ext, sv)}
+    groups_out, _scanned = sn.snapshot_fold(
+        spark, st["root"], st["version"], group=pname, bounds=bounds,
+        partition_eq=peq, cols=mm, sum_cols=sums, temporal_cols=temporal,
+        schema=sdf.schema,
+    )
+    if gtype == "string" and None in groups_out:
+        raise _Refused("hive NULL/'' group")
 
     def typed(s):
         if s is None or gtype == "string":
@@ -1981,47 +1949,6 @@ def _sum_value(kind: str, s, nn: int, dt, unscaled: bool):
     if abs(s) >= (1 << 53) or nn >= (1 << 53):
         raise _Refused("AVG operand past 2^53")
     return s / nn
-
-
-def _group_fold(
-    spark, st: dict, pname: str, bounds: dict, peq: dict, mm: list,
-    sums: list, temporal: dict, schema,
-) -> dict:
-    """``{recorded group value or None: (count, {col: (lo, hi)}, {col:
-    (sum, n_nonnull)})}`` per value of partition transform ``pname``:
-    the manifest's per-file partition values, row counts and sums with
-    no claims and no MIN/MAX, else `snapshot_group_range_agg`."""
-    root, v = st["root"], st["version"]
-    if bounds or peq or mm:
-        res = sn.snapshot_group_range_agg(
-            spark, root, pname, st["transforms"][pname], bounds, mm, v,
-            schema=schema, partition_eq=peq or None, sum_cols=sums,
-            temporal_cols=temporal or None,
-        )
-        return {g: tuple(x) for g, x in res.items()}
-    m = st["m"]
-    if m.get("delete_files"):
-        raise ValueError("MoR delete files")
-    rows_rec = m.get("rows") or {}
-    pvals = m.get("partition_values") or {}
-    sums_rec = m.get("sums") or {}
-    out: dict = {}
-    for f in m["files"]:
-        r = rows_rec.get(f)
-        if r is None:
-            raise ValueError("no recorded row count")
-        if int(r) == 0:
-            continue
-        rec = pvals.get(f) or {}
-        if pname not in rec:
-            raise ValueError("mixed lineage: a file without a value")
-        n, ext, sv = out.get(rec[pname], (0, {}, {c: (None, 0) for c in sums}))
-        for c in sums:
-            if c not in (sums_rec.get(f) or {}):
-                raise ValueError("no recorded sum")
-            sv[c] = sn._fold_sum(sv[c], sums_rec[f][c])
-        out[rec[pname]] = (n + int(r), ext, sv)
-    return out
 
 
 def _unscaled_decimal(u: int, s: int):

@@ -8,11 +8,15 @@ than any plausible driver tolerance; a ``--round N`` mode exists for
 diagnosing float drift.
 
 Usage: python scripts/verify_local.py [--sf /root/testdata/sf0.01] [name ...]
+
+Each name may be an ``fnmatch`` pattern (``'sql_metadata_*'``); a name
+or pattern that matches no registry query exits 2.
 """
 
 from __future__ import annotations
 
 import argparse
+import fnmatch
 import hashlib
 import math
 import os
@@ -73,6 +77,22 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from data_engineering_challenge_spark.session import get_spark
 
+    qs = entrymod.queries()
+    names = list(qs)
+    if args.names:
+        unmatched = [
+            p for p in args.names
+            if not any(fnmatch.fnmatchcase(n, p) for n in names)
+        ]
+        if unmatched:
+            print(f"no registry query matches: {' '.join(unmatched)}",
+                  file=sys.stderr)
+            return 2
+        names = [
+            n for n in names
+            if any(fnmatch.fnmatchcase(n, p) for p in args.names)
+        ]
+
     spark = get_spark(app_name="verify-local")
     con = duckdb.connect()
     for t in TABLES:
@@ -80,9 +100,7 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    names = args.names or list(qs)
     failures = []
     for name in names:
         t0 = time.time()

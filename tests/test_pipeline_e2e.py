@@ -367,11 +367,9 @@ def test_empty_window_touches_no_output(spark, star_dir, tmp_path):
     assert [_files(p) for p in outputs] == before
 
 
-def test_empty_full_build_writes_an_empty_table(spark, star_dir, tmp_path):
-    """A full build rebuilds completely: with no conversions its static
-    overwrite replaces the old journeys table with an empty one, run()
-    stops there, and attribute(None) over the empty table reports empty
-    through its verification count."""
+def _empty_star(spark, star_dir, tmp_path):
+    """A config over ``star_dir``'s tables with no conversions, whose
+    journeys path holds a populated build."""
     import shutil
 
     empty = tmp_path / "empty_star"
@@ -387,6 +385,15 @@ def test_empty_full_build_writes_an_empty_table(spark, star_dir, tmp_path):
     AttributionPipeline(
         spark, dataclasses.replace(cfg, table_dir=star_dir)
     ).build_journeys()
+    return cfg
+
+
+def test_empty_full_build_writes_an_empty_table(spark, star_dir, tmp_path):
+    """A full build rebuilds completely: with no conversions its static
+    overwrite replaces the old journeys table with an empty one, run()
+    stops there, and attribute(None) over the empty table reports empty
+    through its verification count."""
+    cfg = _empty_star(spark, star_dir, tmp_path)
 
     def data_files():
         return [
@@ -402,6 +409,21 @@ def test_empty_full_build_writes_an_empty_table(spark, star_dir, tmp_path):
     pipe._step_empty = False
     pipe.attribute(None)
     assert pipe._step_empty
+
+
+def test_fresh_pipeline_reads_an_empty_journeys_table(
+    spark, star_dir, tmp_path, caplog
+):
+    """The empty journeys table an empty full build leaves has no data
+    file to infer a schema from; a pipeline that did not write it (the
+    send-to-api step in a new process) still reads it as empty."""
+    cfg = _empty_star(spark, star_dir, tmp_path)
+    AttributionPipeline(spark, cfg).build_journeys()
+    fresh = AttributionPipeline(spark, cfg)
+    with caplog.at_level("WARNING"):
+        fresh.attribute(None)
+    assert fresh._step_empty
+    assert "no journeys to attribute" in caplog.text
 
 
 def test_report_summary_reads_the_written_partitions(

@@ -2963,12 +2963,13 @@ def test_pruned_attach_or_disjunction_claims(spark, cdir):
 
 def test_metadata_float_agg_nan_refusals(spark, cdir, tmp_path):
     """Float metadata extremes trust the WRITE-TIME NaN counts
-    (round 12 — Iceberg's nan_value_counts): a NaN-free table answers
-    MIN/MAX from stats with zero data reads; a NaN-carrying file
-    refuses loudly (parquet excludes NaN from min/max, so its finite
-    stats lie about Spark's NaN-is-greatest MAX); a manifest WITHOUT
-    recorded counts (pre-round-12 lineage) refuses too — presence
-    unknown is not presence disproven."""
+    (Iceberg's nan_value_counts): a NaN-free table answers MIN/MAX from
+    stats with zero data reads; a NaN-carrying file, or a manifest
+    WITHOUT recorded counts (presence unknown is not presence
+    disproven), cannot fold its finite stats — parquet excludes NaN
+    from min/max — so the fold scans exactly that file and answers
+    Spark's NaN-is-greatest MAX, while the strict `snapshot_stats_agg`
+    refuses."""
     import json
     import os
 
@@ -2979,21 +2980,45 @@ def test_metadata_float_agg_nan_refusals(spark, cdir, tmp_path):
     )
 
     root = str(tmp_path / "nanful")
+    # two files: 0-4, and 5-9 holding the NaN among finite values
     df = spark.sql(
         "SELECT id AS k, CAST(CASE WHEN id = 7 THEN 'NaN' ELSE "
-        "CAST(id AS STRING) END AS DOUBLE) AS v FROM RANGE(10)"
+        "CAST(id AS STRING) END AS DOUBLE) AS v FROM RANGE(0, 10, 1, 2)"
     )
     sn.snapshot_overwrite(df, root, stats_cols=["k", "v"])
     cat.catalog_register(cdir, "nanful", root)
     stmt = "SELECT MAX(v) AS hv FROM nanful"
     entries = _attach(spark, cdir, stmt)
-    # the recorded count marks the NaN: the fast path refuses ...
-    assert _metadata_answer(spark, cdir, stmt, entries) is None
     with pytest.raises(ValueError, match="NaN"):
-        sn._stats_agg_values(root, ["v"])
-    # ... and real execution returns Spark's NaN-is-greatest answer
-    hv = execute_sql(spark, stmt, cdir).first()["hv"]
+        sn.snapshot_stats_agg(spark, root, ["v"])
+    # the recorded count marks the NaN: the fold scans that file and
+    # answers Spark's NaN-is-greatest MAX
+    got = _metadata_answer(spark, cdir, stmt, entries)
+    assert got is not None
+    hv = got.first()["hv"]
     assert hv != hv  # NaN
+    cat.attach_catalog(spark, cdir)
+    exp = spark.sql(stmt).first()["hv"]
+    assert exp != exp
+    # ... reading only the NaN-carrying file: every other file renamed
+    # away, the answer is unchanged
+    m = sn._read_manifest(root, sn.current_version(root))
+    hidden = [
+        os.path.join(root, f) for f in m["files"]
+        if (m["stats"].get(f) or {}).get("v", [])[2:] == [0]
+    ]
+    assert hidden and len(hidden) < len(m["files"])
+    try:
+        for p in hidden:
+            os.rename(p, p + ".hidden")
+        got = _metadata_answer(spark, cdir, stmt, entries)
+        assert got is not None
+        hv = got.first()["hv"]
+        assert hv != hv
+    finally:
+        for p in hidden:
+            if os.path.exists(p + ".hidden"):
+                os.rename(p + ".hidden", p)
     # MAX over the NaN-free column still answers from stats
     got = _metadata_answer(spark, cdir, "SELECT MAX(k) AS hk FROM nanful",
                         entries)
@@ -3012,8 +3037,9 @@ def test_metadata_float_agg_nan_refusals(spark, cdir, tmp_path):
     got2 = _metadata_answer(spark, cdir, stmt2, entries2)
     assert got2 is not None
     assert tuple(got2.first()) == (0.0, 2.25)
-    # ... until its NaN counts are STRIPPED (a pre-round-12 manifest):
-    # presence unknown must refuse, not answer
+    # ... until its NaN counts are STRIPPED (a manifest without them):
+    # presence unknown cannot fold the stats, so the fold scans and
+    # returns Spark's rows
     mdir = sn._manifest_dir(root2)
     v = sn.current_version(root2)
     payload = json.load(open(sn._manifest_path(root2, v)))
@@ -3025,9 +3051,11 @@ def test_metadata_float_agg_nan_refusals(spark, cdir, tmp_path):
         json.dump(e, open(epath, "w"))
     sn._JSON_CACHE.clear()
     sn._RESOLVED_CACHE.clear()
-    assert _metadata_answer(spark, cdir, stmt2, entries2) is None
+    got2 = _metadata_answer(spark, cdir, stmt2, entries2)
+    assert got2 is not None
+    assert got2.collect() == spark.sql(stmt2).collect()
     with pytest.raises(ValueError, match="NaN count"):
-        sn._stats_agg_values(root2, ["v"])
+        sn.snapshot_stats_agg(spark, root2, ["v"])
 
 
 def test_metadata_range_count_interior_fold(spark, cdir):

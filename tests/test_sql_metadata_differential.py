@@ -32,8 +32,19 @@ from data_engineering_challenge_spark.sql_exec import (
 
 N_STATEMENTS = 80
 
-#: statements answered from metadata before the plan-driven rewrite
+#: fixed statements run after the seeded ones: whole-table extremes of
+#: the NaN-carrying ``x``, which fold from the NaN-free files' stats and
+#: scan the NaN-carrying ones
+EXTRA_STATEMENTS = [
+    "SELECT MIN(x) AS lo, MAX(x) AS hi FROM mf",
+    "SELECT COUNT(*) AS n, MIN(x) AS lo FROM mf LIMIT 1",
+    "SELECT MAX(x) AS hi, MAX(k) AS hk FROM mf",
+]
+
+#: statements answered from metadata before the plan-driven rewrite,
+#: plus the extra statements, answered since one fold serves them all
 PINNED_ANSWERED = {
+    *EXTRA_STATEMENTS,
     'SELECT COUNT(*) AS n FROM mf WHERE k >= 602 AND k < 828 LIMIT 1',
     "SELECT COUNT(*) AS n FROM mf WHERE ts >= TIMESTAMP '2024-01-07 06:00:00' LIMIT 1",
     'SELECT COUNT(*) FROM mf WHERE DAY(ts) = 5 AND k > 246',
@@ -219,8 +230,8 @@ def test_metadata_and_topk_match_plain_attach(spark, mcat, monkeypatch):
     rng = random.Random(20261019)
     answered: set = set()
     kept: dict = {}
-    for i in range(N_STATEMENTS):
-        stmt, total = _statement(rng, i)
+    statements = [_statement(rng, i) for i in range(N_STATEMENTS)]
+    for stmt, total in statements + [(s, False) for s in EXTRA_STATEMENTS]:
         topk.clear()
         got = execute_sql(spark, stmt, mcat)
         cat.attach_catalog(spark, mcat)
